@@ -12,8 +12,9 @@ The reference's only cross-doc linking idea is a commented-out ANN prototype
        c. broadcast alias-dictionary edges (name -> canonical display name).
   2. connected components — iterative hash-min label propagation over the
      undirected pair graph (driver loop, one join+agg per round,
-     truncate_lineage to truncate lineage — reliable checkpoint when a
-     checkpoint dir is configured, localCheckpoint otherwise).  Alias graphs
+     lineage truncated per round inside a session.LineageScope — reliable
+     checkpoint when a checkpoint dir is configured, localCheckpoint
+     otherwise; the per-round cuts are released on return).  Alias graphs
      are star-shaped
      (diameter 2–4 around each canonical form), so hash-min converges in a
      handful of rounds; the O(log n)-round alternating large-star/small-star
@@ -39,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import ids, spec
-from .session import truncate_lineage
+from .session import LineageScope
 from .textops import MINHASH_P, minhash_perm_coeffs
 
 LSH_K = 8            # minhash permutations over char 3-grams
@@ -195,9 +196,9 @@ def connected_components(
 ) -> DataFrame:
     """Hash-min label propagation: (node, comp) with comp = component min.
 
-    One shuffle-join + one aggregation per round; lineage truncated with
-    session.truncate_lineage (reliable checkpoint when a checkpoint dir is
-    configured) so the plan doesn't grow across iterations.  Converges in
+    One shuffle-join + one aggregation per round; lineage truncated per
+    round in a session.LineageScope, so the plan doesn't grow across
+    iterations and only the returned frame stays persisted.  Converges in
     O(diameter) rounds; raises if the cap is hit with labels still moving.
 
     ``num_partitions`` sizes the per-round exchanges to the graph instead
@@ -206,48 +207,47 @@ def connected_components(
     graph.components; the canonicalization caller leaves it unset, keeping
     its measured behavior).
     """
-    e = (
-        pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
-        .union(
-            pairs.select(F.col("name_b").alias("src"), F.col("name_a").alias("dst"))
-        )
-        .distinct()
-    )
-    if num_partitions is not None:
-        e = e.repartition(num_partitions, "dst")
-    e = e.transform(truncate_lineage)
-    comp = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    if num_partitions is not None:
-        comp = comp.repartition(num_partitions, "node")
-    comp = comp.transform(truncate_lineage)
-    for _ in range(max_iter):
-        joined = e.join(comp, e["dst"] == comp["node"]).select("src", "comp")
-        if num_partitions is not None:
-            joined = joined.repartition(num_partitions, "src")
-        nbr_min = joined.groupBy("src").agg(F.min("comp").alias("nbr_comp"))
-        new_comp = (
-            comp.join(nbr_min, comp["node"] == nbr_min["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
+    with LineageScope() as ls:
+        e = (
+            pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
+            .union(
+                pairs.select(F.col("name_b").alias("src"), F.col("name_a").alias("dst"))
             )
-            .transform(truncate_lineage)
+            .distinct()
         )
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
+        if num_partitions is not None:
+            e = e.repartition(num_partitions, "dst")
+        e = ls.cut(e)
+        comp = (
+            e.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("comp", F.col("node"))
         )
-        comp = new_comp
-        if changed == 0:
-            return comp
+        if num_partitions is not None:
+            comp = comp.repartition(num_partitions, "node")
+        comp = ls.cut(comp)
+        for _ in range(max_iter):
+            joined = e.join(comp, e["dst"] == comp["node"]).select("src", "comp")
+            if num_partitions is not None:
+                joined = joined.repartition(num_partitions, "src")
+            nbr_min = joined.groupBy("src").agg(F.min("comp").alias("nbr_comp"))
+            new_comp = ls.cut(
+                comp.join(nbr_min, comp["node"] == nbr_min["src"], "left").select(
+                    "node",
+                    F.least(
+                        F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
+                    ).alias("comp"),
+                )
+            )
+            changed = (
+                new_comp.alias("n")
+                .join(comp.alias("o"), "node")
+                .filter(F.col("n.comp") != F.col("o.comp"))
+                .count()
+            )
+            comp = new_comp
+            if changed == 0:
+                return ls.result(comp)
     raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
 

@@ -853,8 +853,9 @@ def host_pages_rows() -> list[tuple[str, str]]:
     floor), a 2-of-3 and 3-of-3 footer (floor boundary), a line repeated
     twice WITHIN one page (n_pages=1, never boilerplate), a line shared
     across hosts one page each (host-scoped, never boilerplate), a page
-    left EMPTY after stripping, and a whitespace-only page (emits the
-    empty rewrite, not absence)."""
+    left EMPTY after stripping, a whitespace-only page (emits the empty
+    rewrite, not absence), and a host whose whitespace-only page is what
+    holds a line under the 30% gate (every page counts toward the host)."""
     rows: list[tuple[str, str]] = []
     nav = "Home | About | Contact"
     foot = "(c) example press"
@@ -887,6 +888,13 @@ def host_pages_rows() -> list[tuple[str, str]]:
         )
     rows.append(("https://c.test/p2", "C shared footer"))  # empty after strip
     rows.append(("https://e.test/p0", "   \n   \n"))  # spaces-only page
+    # f.test: "F sidebar" on 2 of the host's 7 pages, one of which is
+    # spaces-only: 2/7 = 28.6% < 30% keeps it, though it is on 2/6 = 33% of
+    # the pages that have lines
+    for i in range(6):
+        ls = [f"F post {i}."] + (["F sidebar"] if i < 2 else [])
+        rows.append((f"https://f.test/p{i}", "\n".join(ls)))
+    rows.append(("https://f.test/blank", "  \n"))
     rows.append(
         (
             "https://d.test/p0",

@@ -15,24 +15,32 @@ Spark restatement:
     anti-join per level, ALL start nodes advanced simultaneously (the
     frontier carries a ``start`` column), bounded by max_depth iterations.
     At scale this is the textbook level-synchronous BFS: work per level is
-    |frontier ⋈ edges|, lineage truncated per level with session.truncate_lineage
-    (reliable checkpoint when a checkpoint dir is configured — executor-loss
-    durability at cluster scale; localCheckpoint otherwise).
+    |frontier ⋈ edges|, lineage truncated per level.
   * Determinism deviations from the reference (documented, strict
     improvements): start nodes are ordered by entity_id (the reference takes
     the first 50 in HashMap iteration order, graph.rs:227 — nondeterministic);
     first-visit ties at the same BFS level keep the lexicographically
     smallest path (reference keeps tokio-arrival queue order); the max_paths
     cut is ordered by (depth, path).
+
+Every iterative operator here (BFS, label propagation, closeness, stress,
+k-core, the rank kernel, weighted paths, HITS, components) runs inside one
+:class:`kgspark.session.LineageScope`: it cuts lineage per round (reliable
+checkpoint when a checkpoint dir is configured, localCheckpoint otherwise),
+holds the inputs its rounds re-read, and returns a cut result.  On return
+every other cut and hold is released, so a call leaves one persisted frame
+behind: the one it returned.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .session import truncate_lineage
+from .session import LineageScope
 
 DEFAULT_MAX_DEPTH = 6    # routes/graph.rs:37
 DEFAULT_MAX_PATHS = 5    # routes/graph.rs:38
@@ -129,62 +137,62 @@ def bfs_paths(
     semantics of the reference.  Level-synchronous driver loop, <= max_depth
     rounds, each one join + one anti-join + one min-aggregation.
     """
-    und = undirected(edge_table).select("src", "dst").distinct().transform(truncate_lineage)
-    types = vertex_table.select("id", "entity_type")
+    with LineageScope() as ls:
+        und = ls.cut(undirected(edge_table).select("src", "dst").distinct())
+        types = vertex_table.select("id", "entity_type")
 
-    starts = start_nodes(vertex_table, start_type, q, max_starts).select(
-        F.col("id").alias("start")
-    )
-    frontier = starts.select(
-        "start",
-        F.col("start").alias("node"),
-        F.array("start").alias("path"),
-    ).transform(truncate_lineage)
-    visited = frontier.select("start", "node").transform(truncate_lineage)
-
-    found: list[DataFrame] = []
-    for depth in range(1, max_depth + 1):
-        expanded = (
-            frontier.join(und, frontier["node"] == und["src"])
-            .select(
+        starts = start_nodes(vertex_table, start_type, q, max_starts).select(
+            F.col("id").alias("start")
+        )
+        frontier = ls.cut(
+            starts.select(
                 "start",
-                F.col("dst").alias("node"),
-                F.concat("path", F.array("dst")).alias("path"),
+                F.col("start").alias("node"),
+                F.array("start").alias("path"),
             )
         )
-        fresh = (
-            expanded.join(visited, ["start", "node"], "left_anti")
-            .groupBy("start", "node")
-            .agg(F.min("path").alias("path"))
-            .transform(truncate_lineage)
-        )
-        if fresh.limit(1).count() == 0:
-            break
-        hits = (
-            fresh.join(types, fresh["node"] == types["id"])
-            .filter(F.lower("entity_type") == target_type.lower())
-            .select("start", "path", F.lit(depth).alias("depth"))
-        )
-        found.append(hits)
-        visited = visited.union(fresh.select("start", "node")).transform(truncate_lineage)
-        frontier = fresh
+        visited = ls.cut(frontier.select("start", "node"))
 
-    if not found:
-        return starts.select(
-            "start",
-            F.array().cast("array<string>").alias("path"),
-            F.lit(0).alias("depth"),
-        ).limit(0)
+        found: list[DataFrame] = []
+        for depth in range(1, max_depth + 1):
+            expanded = (
+                frontier.join(und, frontier["node"] == und["src"])
+                .select(
+                    "start",
+                    F.col("dst").alias("node"),
+                    F.concat("path", F.array("dst")).alias("path"),
+                )
+            )
+            fresh = ls.cut(
+                expanded.join(visited, ["start", "node"], "left_anti")
+                .groupBy("start", "node")
+                .agg(F.min("path").alias("path"))
+            )
+            if fresh.limit(1).count() == 0:
+                break
+            hits = (
+                fresh.join(types, fresh["node"] == types["id"])
+                .filter(F.lower("entity_type") == target_type.lower())
+                .select("start", "path", F.lit(depth).alias("depth"))
+            )
+            found.append(hits)
+            visited = ls.cut(visited.union(fresh.select("start", "node")))
+            frontier = fresh
 
-    all_hits = found[0]
-    for df in found[1:]:
-        all_hits = all_hits.union(df)
-    w = Window.partitionBy("start").orderBy("depth", "path")
-    return (
-        all_hits.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_paths)
-        .drop("rn")
-    )
+        if not found:
+            return starts.select(
+                "start",
+                F.array().cast("array<string>").alias("path"),
+                F.lit(0).alias("depth"),
+            ).limit(0)
+
+        w = Window.partitionBy("start").orderBy("depth", "path")
+        return ls.result(
+            reduce(DataFrame.union, found)
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= max_paths)
+            .drop("rn")
+        )
 
 
 def render_paths(
@@ -203,18 +211,10 @@ def render_paths(
         F.posexplode(F.expr("slice(path, 1, size(path) - 1)")).alias("i", "a"),
     ).withColumn("b", F.element_at("path", F.col("i") + 2))
 
-    eds = edge_table.select("src", "dst", "description")
-    fwd = eds.select("src", "dst", "description", F.lit(True).alias("is_forward"))
-    rev = eds.select(
-        F.col("dst").alias("src"),
-        F.col("src").alias("dst"),
-        "description",
-        F.lit(False).alias("is_forward"),
-    )
-    both = fwd.union(rev)
     # one edge per (a,b): prefer forward, then smallest description
     picked = (
-        both.groupBy("src", "dst")
+        undirected(edge_table)
+        .groupBy("src", "dst")
         .agg(F.max(F.struct("is_forward", F.col("description"))).alias("w"))
         .select(
             "src",
@@ -380,6 +380,29 @@ def name_edges(triples: DataFrame) -> DataFrame:
     )
 
 
+def _adjacency(triples: DataFrame) -> DataFrame:
+    """The undirected name graph as (name, nb): each distinct edge of
+    :func:`name_edges` once per direction."""
+    e = name_edges(triples)
+    return e.select(F.col("a").alias("name"), F.col("b").alias("nb")).union(
+        e.select(F.col("b").alias("name"), F.col("a").alias("nb"))
+    )
+
+
+def _graph_parts(spark: SparkSession, n: int) -> int:
+    """Shuffle width for a loop over ``n`` graph rows.
+
+    Size the per-round exchanges to the GRAPH, not the corpus: the iterating
+    frames are O(nodes), and at small node counts the session's corpus-scale
+    width only buys task-launch + checkpoint overhead per round (measured on
+    pagerank: 34s -> ~3s at sf0.1 under local[16]/48).  ~1M rows per
+    partition, capped at the session default so a billion-node graph still
+    uses the cluster-tuned width.
+    """
+    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(default_parts, 1 + n // 1_000_000))
+
+
 def degrees(triples: DataFrame) -> DataFrame:
     """Per-name degree centrality over the distinct name-level edge sets:
     out_degree (distinct objects the name relates to), in_degree (distinct
@@ -461,9 +484,7 @@ def link_prediction(triples: DataFrame, k: int = 50) -> DataFrame:
     sort).  No n² pair enumeration anywhere.
     """
     e = name_edges(triples)
-    adj = e.select(F.col("a").alias("name"), F.col("b").alias("nb")).union(
-        e.select(F.col("b").alias("name"), F.col("a").alias("nb"))
-    )
+    adj = _adjacency(triples)
     deg = adj.groupBy("name").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     lhs = adj.select(F.col("name").alias("z"), F.col("nb").alias("a"))
     rhs = adj.select(F.col("name").alias("z"), F.col("nb").alias("b"))
@@ -494,30 +515,26 @@ def components(triples: DataFrame) -> DataFrame:
     """
     from . import canon
 
-    pairs = (
-        triples.select(
-            F.col("subj").alias("name_a"), F.col("obj").alias("name_b")
+    with LineageScope() as ls:
+        pairs = ls.hold(
+            triples.select(
+                F.col("subj").alias("name_a"), F.col("obj").alias("name_b")
+            )
+            .filter(F.col("name_a") != F.col("name_b"))
+            .distinct()
         )
-        .filter(F.col("name_a") != F.col("name_b"))
-        .distinct()
-        .persist()
-    )
-    # size the per-round exchanges to the graph (~1M edges per partition,
-    # capped at the session width) — the pagerank rationale, see there
-    n_pairs = pairs.count()
-    spark = triples.sparkSession
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nparts = max(1, min(default_parts, 1 + n_pairs // 1_000_000))
-    comp = canon.connected_components(pairs, num_partitions=nparts)
-    pairs.unpersist()
-    sizes = comp.groupBy("comp").agg(
-        F.count(F.lit(1)).cast("long").alias("n_members")
-    )
-    return comp.join(sizes, "comp").select(
-        F.col("node").alias("name"),
-        F.col("comp").alias("component_id"),
-        "n_members",
-    )
+        nparts = _graph_parts(triples.sparkSession, pairs.count())
+        comp = ls.adopt(canon.connected_components(pairs, num_partitions=nparts))
+        sizes = comp.groupBy("comp").agg(
+            F.count(F.lit(1)).cast("long").alias("n_members")
+        )
+        return ls.result(
+            comp.join(sizes, "comp").select(
+                F.col("node").alias("name"),
+                F.col("comp").alias("component_id"),
+                "n_members",
+            )
+        )
 
 
 LPA_ITERS = 5
@@ -546,37 +563,32 @@ def lpa_communities(triples: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     via min(struct(-count, label)) — no windows over whole partitions;
     lineage truncated per round so the plan stays O(1) deep.
     """
-    e = name_edges(triples)
-    adj = (
-        e.select(F.col("a").alias("name"), F.col("b").alias("nb"))
-        .union(e.select(F.col("b").alias("name"), F.col("a").alias("nb")))
-        .persist()
-    )
-    lab = adj.select("name").distinct().withColumn("label", F.col("name"))
-    lab = lab.persist()
-    for _ in range(iters):
-        votes = (
-            adj.join(
-                lab.select(F.col("name").alias("nb"), "label"), "nb"
+    with LineageScope() as ls:
+        adj = ls.hold(_adjacency(triples))
+        lab = adj.select("name").distinct().withColumn("label", F.col("name"))
+        for _ in range(iters):
+            votes = (
+                adj.join(
+                    lab.select(F.col("name").alias("nb"), "label"), "nb"
+                )
+                .groupBy("name", "label")
+                .agg(F.count(F.lit(1)).cast("long").alias("n"))
             )
-            .groupBy("name", "label")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+            lab = ls.cut(
+                votes.groupBy("name")
+                .agg(
+                    F.min(F.struct((-F.col("n")).alias("neg"), "label")).alias("s")
+                )
+                .select("name", F.col("s.label").alias("label"))
+            )
+        sizes = lab.groupBy("label").agg(
+            F.count(F.lit(1)).cast("long").alias("n_members")
         )
-        new = (
-            votes.groupBy("name")
-            .agg(F.min(F.struct((-F.col("n")).alias("neg"), "label")).alias("s"))
-            .select("name", F.col("s.label").alias("label"))
+        return ls.result(
+            lab.join(sizes, "label").select(
+                "name", F.col("label").alias("community_id"), "n_members"
+            )
         )
-        prev = lab
-        lab = truncate_lineage(new).persist()
-        prev.unpersist()
-    adj.unpersist()
-    sizes = lab.groupBy("label").agg(
-        F.count(F.lit(1)).cast("long").alias("n_members")
-    )
-    return lab.join(sizes, "label").select(
-        "name", F.col("label").alias("community_id"), "n_members"
-    )
 
 
 CLOSENESS_SCALE = 10**6
@@ -601,55 +613,47 @@ def harmonic_closeness(
     run the standard K-sampled-sources estimate (deterministic: the K
     lexicographically-smallest names), which bounds state by K·m.
     """
-    e = name_edges(triples)
-    adj = (
-        e.select(F.col("a").alias("name"), F.col("b").alias("nb"))
-        .union(e.select(F.col("b").alias("name"), F.col("a").alias("nb")))
-        .persist()
-    )
-    nodes = adj.select("name").distinct()
-    sources = (
-        nodes.orderBy("name").limit(n_sources) if n_sources else nodes
-    ).select(F.col("name").alias("src"))
-    frontier = sources.select("src", F.col("src").alias("node")).persist()
-    visited = frontier
-    per_round = []
-    dist = 0
-    while dist < max_iters:
-        dist += 1
-        nxt = (
-            frontier.join(adj, frontier["node"] == adj["name"])
-            .select("src", F.col("nb").alias("node"))
-            .distinct()
-            .join(visited, ["src", "node"], "left_anti")
+    with LineageScope() as ls:
+        adj = ls.hold(_adjacency(triples))
+        nodes = adj.select("name").distinct()
+        sources = (
+            nodes.orderBy("name").limit(n_sources) if n_sources else nodes
+        ).select(F.col("name").alias("src"))
+        frontier = visited = ls.hold(
+            sources.select("src", F.col("src").alias("node"))
         )
-        nxt = truncate_lineage(nxt).persist()
-        if nxt.limit(1).count() == 0:
-            nxt.unpersist()
-            break
-        per_round.append(
-            nxt.groupBy("src").agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                (F.count(F.lit(1)) * (CLOSENESS_SCALE // dist))
-                .cast("long")
-                .alias("h"),
+        per_round = []
+        for dist in range(1, max_iters + 1):
+            nxt = ls.cut(
+                frontier.join(adj, frontier["node"] == adj["name"])
+                .select("src", F.col("nb").alias("node"))
+                .distinct()
+                .join(visited, ["src", "node"], "left_anti")
+            )
+            if nxt.limit(1).count() == 0:
+                break
+            per_round.append(
+                nxt.groupBy("src").agg(
+                    F.count(F.lit(1)).cast("long").alias("n"),
+                    (F.count(F.lit(1)) * (CLOSENESS_SCALE // dist))
+                    .cast("long")
+                    .alias("h"),
+                )
+            )
+            visited = ls.cut(visited.union(nxt))
+            frontier = nxt
+        if not per_round:
+            return triples.sparkSession.createDataFrame(
+                [], "name string, n_reachable long, harmonic_micro long"
+            )
+        return ls.result(
+            reduce(DataFrame.union, per_round)
+            .groupBy(F.col("src").alias("name"))
+            .agg(
+                F.sum("n").cast("long").alias("n_reachable"),
+                F.sum("h").cast("long").alias("harmonic_micro"),
             )
         )
-        visited = truncate_lineage(visited.union(nxt)).persist()
-        frontier = nxt
-    adj.unpersist()
-    spark = triples.sparkSession
-    if not per_round:
-        return spark.createDataFrame(
-            [], "name string, n_reachable long, harmonic_micro long"
-        )
-    allr = per_round[0]
-    for r in per_round[1:]:
-        allr = allr.union(r)
-    return allr.groupBy(F.col("src").alias("name")).agg(
-        F.sum("n").cast("long").alias("n_reachable"),
-        F.sum("h").cast("long").alias("harmonic_micro"),
-    )
 
 
 STRESS_SOURCES = 8
@@ -683,98 +687,84 @@ def stress_centrality(
     never the plan; sampling bounds state and rounds independently of
     corpus size.
     """
-    e = name_edges(triples)
-    adj = (
-        e.select(F.col("a").alias("name"), F.col("b").alias("nb"))
-        .union(e.select(F.col("b").alias("name"), F.col("a").alias("nb")))
-        .persist()
-    )
-    nodes = adj.select("name").distinct().persist()
-    sources = nodes.orderBy("name").limit(n_sources).select(
-        F.col("name").alias("src")
-    )
-    cur = truncate_lineage(
-        sources.select(
-            "src",
-            F.col("src").alias("node"),
-            F.lit(1).cast("long").alias("sigma"),
+    with LineageScope() as ls:
+        adj = ls.hold(_adjacency(triples))
+        nodes = ls.hold(adj.select("name").distinct())
+        sources = nodes.orderBy("name").limit(n_sources).select(
+            F.col("name").alias("src")
         )
-    ).persist()
-    levels = [cur]
-    settled = cur.select("src", "node").persist()
-    _pinned = [cur, settled]  # every persisted frame, released before return
-    for _ in range(max_depth):
-        nxt = (
-            levels[-1]
-            .join(adj, levels[-1]["node"] == adj["name"])
-            .select("src", F.col("nb").alias("node"), "sigma")
-            .join(settled, ["src", "node"], "left_anti")
-            .groupBy("src", "node")
-            .agg(F.sum("sigma").cast("long").alias("sigma"))
-        )
-        nxt = truncate_lineage(nxt).persist()
-        if nxt.limit(1).count() == 0:
-            nxt.unpersist()
-            break
-        levels.append(nxt)
-        settled = truncate_lineage(
-            settled.union(nxt.select("src", "node"))
-        ).persist()
-        _pinned.extend([nxt, settled])
-    psis = [
-        levels[-1].select("src", "node", F.lit(0).cast("long").alias("psi"))
-    ]
-    for lv in range(len(levels) - 2, -1, -1):
-        succ = (
-            levels[lv]
-            .select("src", "node")
-            .join(adj, F.col("node") == adj["name"])
-            .select("src", "node", F.col("nb").alias("w"))
-        )
-        contrib = (
-            succ.join(
-                psis[-1].select(
-                    "src", F.col("node").alias("w"), F.col("psi").alias("wpsi")
-                ),
-                ["src", "w"],
+        levels = [
+            ls.cut(
+                sources.select(
+                    "src",
+                    F.col("src").alias("node"),
+                    F.lit(1).cast("long").alias("sigma"),
+                )
             )
-            .groupBy("src", "node")
-            .agg(F.sum(F.lit(1) + F.col("wpsi")).cast("long").alias("psi"))
+        ]
+        settled = ls.hold(levels[0].select("src", "node"))
+        for _ in range(max_depth):
+            nxt = ls.cut(
+                levels[-1]
+                .join(adj, levels[-1]["node"] == adj["name"])
+                .select("src", F.col("nb").alias("node"), "sigma")
+                .join(settled, ["src", "node"], "left_anti")
+                .groupBy("src", "node")
+                .agg(F.sum("sigma").cast("long").alias("sigma"))
+            )
+            if nxt.limit(1).count() == 0:
+                break
+            levels.append(nxt)
+            settled = ls.cut(settled.union(nxt.select("src", "node")))
+        psis = [
+            levels[-1].select("src", "node", F.lit(0).cast("long").alias("psi"))
+        ]
+        for lv in range(len(levels) - 2, -1, -1):
+            succ = (
+                levels[lv]
+                .select("src", "node")
+                .join(adj, F.col("node") == adj["name"])
+                .select("src", "node", F.col("nb").alias("w"))
+            )
+            contrib = (
+                succ.join(
+                    psis[-1].select(
+                        "src", F.col("node").alias("w"), F.col("psi").alias("wpsi")
+                    ),
+                    ["src", "w"],
+                )
+                .groupBy("src", "node")
+                .agg(F.sum(F.lit(1) + F.col("wpsi")).cast("long").alias("psi"))
+            )
+            psi_l = (
+                levels[lv]
+                .select("src", "node")
+                .join(contrib, ["src", "node"], "left")
+                .select(
+                    "src",
+                    "node",
+                    F.coalesce("psi", F.lit(0)).cast("long").alias("psi"),
+                )
+            )
+            psis.append(ls.cut(psi_l))
+        allf = reduce(
+            DataFrame.union,
+            [
+                lvl.join(psi, ["src", "node"]).select("src", "node", "sigma", "psi")
+                for lvl, psi in zip(reversed(levels), psis)
+            ],
         )
-        psi_l = (
-            levels[lv]
-            .select("src", "node")
-            .join(contrib, ["src", "node"], "left")
-            .select(
-                "src",
-                "node",
-                F.coalesce("psi", F.lit(0)).cast("long").alias("psi"),
+        stress = (
+            allf.filter(F.col("node") != F.col("src"))
+            .select("node", (F.col("sigma") * F.col("psi")).alias("c"))
+            .groupBy(F.col("node").alias("name"))
+            .agg(F.sum("c").cast("long").alias("stress"))
+        )
+        return ls.result(
+            nodes.join(stress, "name", "left").select(
+                "name", F.coalesce("stress", F.lit(0)).cast("long").alias("stress")
             )
         )
-        psis.append(truncate_lineage(psi_l).persist())
-        _pinned.append(psis[-1])
-    frames = [
-        lvl.join(psi, ["src", "node"]).select("src", "node", "sigma", "psi")
-        for lvl, psi in zip(reversed(levels), psis)
-    ]
-    allf = frames[0]
-    for fr in frames[1:]:
-        allf = allf.union(fr)
-    stress = (
-        allf.filter(F.col("node") != F.col("src"))
-        .select("node", (F.col("sigma") * F.col("psi")).alias("c"))
-        .groupBy(F.col("node").alias("name"))
-        .agg(F.sum("c").cast("long").alias("stress"))
-    )
-    out = nodes.join(stress, "name", "left").select(
-        "name", F.coalesce("stress", F.lit(0)).cast("long").alias("stress")
-    )
-    out = truncate_lineage(out)  # materializes — safe to release everything
-    adj.unpersist()
-    nodes.unpersist()
-    for fr in _pinned:
-        fr.unpersist()
-    return out
 
 
 KCORE_ITERS = 8
@@ -813,70 +803,148 @@ def kcore(
     Output: (name, coreness) as long; isolated names (no edges) don't
     appear, matching degrees()/triangle_counts() join semantics.
     """
-    e = name_edges(triples)
-    adj = (
-        e.select(F.col("a").alias("name"), F.col("b").alias("nb"))
-        .union(e.select(F.col("b").alias("name"), F.col("a").alias("nb")))
-        .persist()
-    )
-    n_adj = adj.count()
     spark = triples.sparkSession
-    if n_adj == 0:
-        adj.unpersist()
-        return spark.createDataFrame([], "name string, coreness long")
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nparts = max(1, min(default_parts, 1 + n_adj // 1_000_000))
-    adj2 = adj.repartition(nparts, "nb").persist()
-    adj2.count()
-    adj.unpersist()
+    with LineageScope() as ls:
+        adj = ls.hold(_adjacency(triples))
+        n_adj = adj.count()
+        if n_adj == 0:
+            return spark.createDataFrame([], "name string, coreness long")
+        adj = ls.hold(adj.repartition(_graph_parts(spark, n_adj), "nb"))
+        adj.count()
 
-    cur = adj2.groupBy("name").agg(
-        F.count(F.lit(1)).cast("long").alias("val")
-    )
-    h_index = F.expr(
-        "size(filter(transform(sort_array(collect_list(nbval), false),"
-        " (v, i) -> v >= CAST(i + 1 AS BIGINT)), x -> x))"
-    ).cast("long")
-    for _ in range(iters):
-        cur = truncate_lineage(cur)
-        nbvals = adj2.join(
-            cur.select(F.col("name").alias("nb"), F.col("val").alias("nbval")),
-            "nb",
-        )
-        cur = nbvals.groupBy("name").agg(h_index.alias("val"))
-    result = truncate_lineage(
-        cur.select("name", F.col("val").alias("coreness"))
-    )
-    if assert_converged:
-        nxt = (
-            adj2.join(
-                result.select(
-                    F.col("name").alias("nb"), F.col("coreness").alias("nbval")
-                ),
+        def h_round(state: DataFrame) -> DataFrame:
+            nbvals = adj.join(
+                state.select(F.col("name").alias("nb"), F.col("val").alias("nbval")),
                 "nb",
             )
-            .groupBy("name")
-            .agg(h_index.alias("val"))
-        )
-        moved = (
-            result.join(nxt, "name")
-            .filter(F.col("coreness") != F.col("val"))
-            .limit(1)
-            .count()
-        )
-        if moved:
-            adj2.unpersist()
-            raise ValueError(
-                f"kcore did not converge in {iters} rounds (graph radius"
-                f" exceeds the round budget) — raise iters"
+            return nbvals.groupBy("name").agg(
+                F.expr(
+                    "size(filter(transform(sort_array(collect_list(nbval), false),"
+                    " (v, i) -> v >= CAST(i + 1 AS BIGINT)), x -> x))"
+                ).cast("long").alias("val")
             )
-    adj2.unpersist()
-    return result
+
+        cur = adj.groupBy("name").agg(
+            F.count(F.lit(1)).cast("long").alias("val")
+        )
+        for _ in range(iters):
+            cur = h_round(ls.cut(cur))
+        result = ls.result(cur.withColumnRenamed("val", "coreness"))
+        if assert_converged:
+            nxt = h_round(result.withColumnRenamed("coreness", "val"))
+            moved = (
+                result.join(nxt, "name")
+                .filter(F.col("coreness") != F.col("val"))
+                .limit(1)
+                .count()
+            )
+            if moved:
+                raise ValueError(
+                    f"kcore did not converge in {iters} rounds (graph radius"
+                    f" exceeds the round budget) — raise iters"
+                )
+        return result
 
 
 PAGERANK_SCALE = 10**12
 PAGERANK_ITERS = 15
 PPR_SEEDS = 3
+
+
+def _directed(ls: LineageScope, triples: DataFrame):
+    """Shared prep of the directed operators (pagerank, PPR, HITS): the
+    distinct non-self-loop (subj, obj) pairs partitioned on ``subj`` and the
+    nodes as (name, out_deg) partitioned on ``name``, both held by ``ls``
+    with the same :func:`_graph_parts` width, so every per-round join reuses
+    the distribution.  Returns (pairs, nodes, n_nodes, nparts), or None for
+    an empty graph."""
+    d = ls.hold(
+        triples.select("subj", "obj").filter(F.col("subj") != F.col("obj")).distinct()
+    )
+    out_deg = d.groupBy(F.col("subj").alias("name")).agg(
+        F.count(F.lit(1)).cast("long").alias("out_deg")
+    )
+    nodes = ls.hold(
+        d.select(F.col("subj").alias("name"))
+        .union(d.select(F.col("obj").alias("name")))
+        .distinct()
+        .join(out_deg, "name", "left")
+        .select("name", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+    )
+    n = nodes.count()
+    if n == 0:
+        return None
+    nparts = _graph_parts(triples.sparkSession, n)
+    d = ls.hold(d.repartition(nparts, "subj"))
+    nodes = ls.hold(nodes.repartition(nparts, "name"))
+    d.count()
+    nodes.count()
+    return d, nodes, n, nparts
+
+
+def _rank_rounds(
+    ls: LineageScope,
+    d: DataFrame,
+    nodes: DataFrame,
+    seed: str,
+    k: int,
+    iters: int,
+    scale: int,
+    nparts: int,
+) -> DataFrame:
+    """The integer rank recurrence of :func:`pagerank` and
+    :func:`personalized_pagerank`, ``iters`` rounds from the prep of
+    :func:`_directed`.  ``seed`` is a SQL expression over ``nodes`` that is 1
+    on a seed and 0 elsewhere, ``k`` the number of seeds; restart and
+    dangling mass return to the seeds::
+
+        r'(v) = seed(v) * (15*scale DIV (100*k))
+                + 85 * (inflow(v) + seed(v) * (dangling DIV k)) DIV 100
+
+    PageRank is the case seed ≡ 1, k = N.  Returns the ``nodes`` columns
+    plus ``rank``.
+
+    Per round: one broadcast 1-row dangling aggregate (not a driver
+    collect), one edge⋈rank join reusing the ``subj`` distribution, one
+    inflow aggregation repartitioned to the same width.  Lineage MUST
+    truncate every round: each round reads the ranks three times (dangling
+    agg, inflow join, rank update), so an uncheckpointed k-round window
+    re-evaluates the chain 3^k-fold — measured 8.7s with a 3-round window vs
+    5.3s per-round at sf0.1 (the same blowup the oracle's AS MATERIALIZED
+    CTEs prevent).
+    """
+    base = (15 * scale) // (100 * k)
+    ranks = nodes.select(
+        *nodes.columns, F.expr(f"CAST({seed} * {scale // k}L AS BIGINT)").alias("rank")
+    )
+    for _ in range(iters):
+        ranks = ls.cut(ranks)
+        dangf = ranks.filter(F.col("out_deg") == 0).agg(
+            F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dang")
+        )
+        inflow = (
+            d.join(
+                ranks.filter((F.col("out_deg") > 0) & (F.col("rank") > 0))
+                .select(F.col("name").alias("subj"), "out_deg", "rank"),
+                "subj",
+            )
+            .select("obj", F.expr("rank DIV out_deg").alias("share"))
+            .repartition(nparts, "obj")
+            .groupBy(F.col("obj").alias("name"))
+            .agg(F.sum("share").alias("inflow"))
+        )
+        ranks = (
+            nodes.join(inflow, "name", "left")
+            .crossJoin(F.broadcast(dangf))
+            .select(
+                *nodes.columns,
+                F.expr(
+                    f"CAST({seed} * {base}L + 85 * (coalesce(inflow, 0L)"
+                    f" + {seed} * (dang DIV {k}L)) DIV 100 AS BIGINT)"
+                ).alias("rank"),
+            )
+        )
+    return ranks
 
 
 def personalized_pagerank(
@@ -901,99 +969,19 @@ def personalized_pagerank(
         r'(v) = [v∈S] * (15*scale DIV (100*k))
                 + 85 * (inflow(v) + [v∈S] * (dangling DIV k)) DIV 100
 
-    Scale shape identical to pagerank: per round one broadcast-scalar
-    dangling aggregate, one edge⋈rank join co-partitioned on the name
-    key, one destination-key hash aggregate, lineage truncated per round.
+    Same kernel and per-round plan as pagerank (:func:`_rank_rounds`); the
+    k seed names are collected once and flag the nodes by literal
+    membership, so no round joins a seed frame.
     """
-    d = (
-        triples.select("subj", "obj")
-        .filter(F.col("subj") != F.col("obj"))
-        .distinct()
-        .persist()
-    )
-    out_deg = d.groupBy(F.col("subj").alias("name")).agg(
-        F.count(F.lit(1)).cast("long").alias("out_deg")
-    )
-    seedless = (
-        d.select(F.col("subj").alias("name"))
-        .union(d.select(F.col("obj").alias("name")))
-        .distinct()
-        .join(out_deg, "name", "left")
-        .select("name", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-    )
-    seeds = seedless.orderBy("name").limit(n_seeds).select(
-        "name", F.lit(1).alias("is_seed")
-    )
-    nodes = (
-        seedless.join(F.broadcast(seeds), "name", "left")
-        .select(
-            "name",
-            "out_deg",
-            F.coalesce("is_seed", F.lit(0)).cast("long").alias("is_seed"),
-        )
-        .persist()
-    )
-    n = nodes.count()
-    spark = triples.sparkSession
-    if n == 0:
-        d.unpersist()
-        nodes.unpersist()
-        return spark.createDataFrame([], "name string, ppr long")
-    k = min(n_seeds, n)
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nparts = max(1, min(default_parts, 1 + n // 1_000_000))
-    d2 = d.repartition(nparts, "subj").persist()
-    nodes2 = nodes.repartition(nparts, "name").persist()
-    d2.count()
-    nodes2.count()
-    d.unpersist()
-    nodes.unpersist()
-    base = (15 * scale) // (100 * k)
-    ranks = nodes2.select(
-        "name",
-        "out_deg",
-        "is_seed",
-        (F.col("is_seed") * F.lit(scale // k)).cast("long").alias("rank"),
-    )
-    for _ in range(iters):
-        ranks = truncate_lineage(ranks)
-        dangf = ranks.filter(F.col("out_deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dang")
-        )
-        inflow = (
-            d2.join(
-                ranks.filter(
-                    (F.col("out_deg") > 0) & (F.col("rank") > 0)
-                ).withColumnRenamed("name", "subj"),
-                "subj",
-            )
-            .select("obj", F.expr("rank DIV out_deg").alias("share"))
-            .repartition(nparts, "obj")
-            .groupBy(F.col("obj").alias("name"))
-            .agg(F.sum("share").alias("inflow"))
-        )
-        ranks = (
-            nodes2.join(inflow, "name", "left")
-            .crossJoin(F.broadcast(dangf))
-            .select(
-                "name",
-                "out_deg",
-                "is_seed",
-                (
-                    F.col("is_seed") * F.lit(base)
-                    + F.expr(
-                        f"85 * (coalesce(inflow, 0L)"
-                        f" + is_seed * (dang DIV {k}L)) DIV 100"
-                    )
-                ).cast("long").alias("rank"),
-            )
-        )
-    result = truncate_lineage(
-        ranks.select("name", "is_seed", F.col("rank").alias("ppr"))
-    )
-    d2.unpersist()
-    nodes2.unpersist()
-    return result
+    with LineageScope() as ls:
+        g = _directed(ls, triples)
+        if g is None:
+            return triples.sparkSession.createDataFrame([], "name string, ppr long")
+        d, nodes, _, nparts = g
+        seeds = [r["name"] for r in nodes.orderBy("name").limit(n_seeds).collect()]
+        nodes = nodes.withColumn("is_seed", F.col("name").isin(seeds).cast("long"))
+        ranks = _rank_rounds(ls, d, nodes, "is_seed", len(seeds), iters, scale, nparts)
+        return ls.result(ranks.select("name", "is_seed", F.col("rank").alias("ppr")))
 
 
 WSP_SEEDS = 3
@@ -1028,53 +1016,47 @@ def weighted_shortest_paths(
     row per reached node (bounded by |V|), lineage truncated per round.
     No path enumeration — costs fold, paths don't materialize.
     """
-    edges = (
-        triples.filter(F.col("subj") != F.col("obj"))
-        .groupBy("subj", "obj")
-        .agg(F.countDistinct("doc_id").cast("long").alias("support"))
-        .select(
-            "subj",
-            "obj",
-            F.expr(f"CAST({micro} DIV support AS BIGINT)").alias("w"),
-        )
-    )
     spark = triples.sparkSession
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nparts = max(1, min(default_parts, 8))
-    edges = edges.repartition(nparts, "subj").persist()
-    n_edges = edges.count()
-    if n_edges == 0:
-        edges.unpersist()
-        return spark.createDataFrame([], "name string, dist_micro long")
-    nodes = (
-        edges.select(F.col("subj").alias("name"))
-        .union(edges.select(F.col("obj").alias("name")))
-        .distinct()
-    )
-    dist = (
-        nodes.orderBy("name")
-        .limit(n_seeds)
-        .select("name", F.lit(0).cast("long").alias("dist"))
-    )
-    for _ in range(hops):
-        dist = truncate_lineage(dist)
-        relaxed = (
-            dist.join(edges, dist["name"] == edges["subj"])
+    nparts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")), 8))
+    with LineageScope() as ls:
+        edges = ls.hold(
+            triples.filter(F.col("subj") != F.col("obj"))
+            .groupBy("subj", "obj")
+            .agg(F.countDistinct("doc_id").cast("long").alias("support"))
             .select(
-                F.col("obj").alias("name"),
-                (F.col("dist") + F.col("w")).cast("long").alias("dist"),
+                "subj",
+                "obj",
+                F.expr(f"CAST({micro} DIV support AS BIGINT)").alias("w"),
             )
+            .repartition(nparts, "subj")
+        )
+        if edges.count() == 0:
+            return spark.createDataFrame([], "name string, dist_micro long")
+        nodes = (
+            edges.select(F.col("subj").alias("name"))
+            .union(edges.select(F.col("obj").alias("name")))
+            .distinct()
         )
         dist = (
-            dist.unionByName(relaxed)
-            .groupBy("name")
-            .agg(F.min("dist").cast("long").alias("dist"))
+            nodes.orderBy("name")
+            .limit(n_seeds)
+            .select("name", F.lit(0).cast("long").alias("dist"))
         )
-    result = truncate_lineage(
-        dist.select("name", F.col("dist").alias("dist_micro"))
-    )
-    edges.unpersist()
-    return result
+        for _ in range(hops):
+            dist = ls.cut(dist)
+            relaxed = (
+                dist.join(edges, dist["name"] == edges["subj"])
+                .select(
+                    F.col("obj").alias("name"),
+                    (F.col("dist") + F.col("w")).cast("long").alias("dist"),
+                )
+            )
+            dist = (
+                dist.unionByName(relaxed)
+                .groupBy("name")
+                .agg(F.min("dist").cast("long").alias("dist"))
+            )
+        return ls.result(dist.select("name", F.col("dist").alias("dist_micro")))
 
 
 HITS_SCALE = 10**6
@@ -1096,41 +1078,14 @@ def hits(
     ``2^63/scale²``).  All arithmetic is 64-bit integer, so the result is
     BIT-EXACT under any partitioning — same contract as :func:`pagerank`.
 
-    Same per-round plan discipline as pagerank: graph-sized partitioning,
-    co-partitioned edge⋈state joins, broadcast 1-row normalization sums,
-    lineage truncated EVERY round (each round reads the state three times;
-    a k-round uncheckpointed window re-evaluates 3^k-fold).
+    Same prep (:func:`_directed`) and per-round plan discipline as
+    pagerank: co-partitioned edge⋈state joins, broadcast 1-row
+    normalization sums, lineage truncated EVERY round and once mid-round
+    (each round reads the state three times; a k-round uncheckpointed
+    window re-evaluates 3^k-fold).
 
     Output: (name, hub, authority) as longs.
     """
-    d = (
-        triples.select("subj", "obj")
-        .filter(F.col("subj") != F.col("obj"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        d.select(F.col("subj").alias("name"))
-        .union(d.select(F.col("obj").alias("name")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        d.unpersist()
-        nodes.unpersist()
-        return triples.sparkSession.createDataFrame(
-            [], "name string, hub long, authority long"
-        )
-    spark = triples.sparkSession
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nparts = max(1, min(default_parts, 1 + n // 1_000_000))
-    d2 = d.repartition(nparts, "subj").persist()
-    nodes2 = nodes.repartition(nparts, "name").persist()
-    d2.count()
-    nodes2.count()
-    d.unpersist()
-    nodes.unpersist()
 
     def _norm(df: DataFrame, col: str) -> DataFrame:
         total = df.agg(
@@ -1146,42 +1101,46 @@ def hits(
             )
         )
 
-    state = nodes2.select(
-        "name",
-        F.lit(scale // n).cast("long").alias("hub"),
-        F.lit(scale // n).cast("long").alias("authority"),
-    )
-    for _ in range(iters):
-        state = truncate_lineage(state)
-        a_raw = (
-            d2.join(
-                state.select(F.col("name").alias("subj"), "hub"), "subj"
+    with LineageScope() as ls:
+        g = _directed(ls, triples)
+        if g is None:
+            return triples.sparkSession.createDataFrame(
+                [], "name string, hub long, authority long"
             )
-            .repartition(nparts, "obj")
-            .groupBy(F.col("obj").alias("name"))
-            .agg(F.sum("hub").cast("long").alias("authority"))
+        d, nodes, n, nparts = g
+        state = nodes.select(
+            "name",
+            F.lit(scale // n).cast("long").alias("hub"),
+            F.lit(scale // n).cast("long").alias("authority"),
         )
-        a_full = nodes2.join(a_raw, "name", "left").select(
-            "name", F.coalesce("authority", F.lit(0)).alias("authority")
-        )
-        a_new = truncate_lineage(_norm(a_full, "authority"))
-        h_raw = (
-            d2.join(
-                a_new.select(F.col("name").alias("obj"), "authority"), "obj"
+        for _ in range(iters):
+            state = ls.cut(state)
+            a_raw = (
+                d.join(
+                    state.select(F.col("name").alias("subj"), "hub"), "subj"
+                )
+                .repartition(nparts, "obj")
+                .groupBy(F.col("obj").alias("name"))
+                .agg(F.sum("hub").cast("long").alias("authority"))
             )
-            .repartition(nparts, "subj")
-            .groupBy(F.col("subj").alias("name"))
-            .agg(F.sum("authority").cast("long").alias("hub"))
-        )
-        h_full = nodes2.join(h_raw, "name", "left").select(
-            "name", F.coalesce("hub", F.lit(0)).alias("hub")
-        )
-        h_new = _norm(h_full, "hub")
-        state = h_new.join(a_new, "name").select("name", "hub", "authority")
-    result = truncate_lineage(state)
-    d2.unpersist()
-    nodes2.unpersist()
-    return result
+            a_full = nodes.join(a_raw, "name", "left").select(
+                "name", F.coalesce("authority", F.lit(0)).alias("authority")
+            )
+            a_new = ls.cut(_norm(a_full, "authority"))
+            h_raw = (
+                d.join(
+                    a_new.select(F.col("name").alias("obj"), "authority"), "obj"
+                )
+                .repartition(nparts, "subj")
+                .groupBy(F.col("subj").alias("name"))
+                .agg(F.sum("authority").cast("long").alias("hub"))
+            )
+            h_full = nodes.join(h_raw, "name", "left").select(
+                "name", F.coalesce("hub", F.lit(0)).alias("hub")
+            )
+            h_new = _norm(h_full, "hub")
+            state = h_new.join(a_new, "name").select("name", "hub", "authority")
+        return ls.result(state)
 
 
 def pagerank(
@@ -1200,104 +1159,23 @@ def pagerank(
     order (float PageRank sums in nondeterministic order; fixed-point
     makes the value-hash oracle well-defined).
 
-    Pregel-style driver loop in the BFS/hash-min-CC discipline: per round
-    one broadcast-scalar dangling aggregate, one edge⋈rank join + one
-    hash aggregate on the destination key, lineage truncated per round
-    (localCheckpoint, or the reliable checkpoint dir when configured).
-    Edges and the degree frame are computed once and persisted; at cluster
-    scale both sides of the per-round join are co-partitioned on the name
-    key, so each round is one shuffle of the rank frame.
+    This is the all-nodes-seeded case (seed ≡ 1, k = N) of the kernel
+    :func:`personalized_pagerank` runs (:func:`_rank_rounds`): a
+    Pregel-style driver loop, per round one broadcast-scalar dangling
+    aggregate, one edge⋈rank join + one hash aggregate on the destination
+    key.  Edges and the degree frame are computed once and held; both sides
+    of the per-round join are co-partitioned on the name key, so each round
+    is one shuffle of the rank frame.
     """
-    d = (
-        triples.select("subj", "obj")
-        .filter(F.col("subj") != F.col("obj"))
-        .distinct()
-        .persist()
-    )
-    out_deg = d.groupBy(F.col("subj").alias("name")).agg(
-        F.count(F.lit(1)).cast("long").alias("out_deg")
-    )
-    nodes = (
-        d.select(F.col("subj").alias("name"))
-        .union(d.select(F.col("obj").alias("name")))
-        .distinct()
-        .join(out_deg, "name", "left")
-        .select("name", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        d.unpersist()
-        nodes.unpersist()
-        return triples.sparkSession.createDataFrame(
-            [], "name string, pagerank long"
-        )
-    # Size the per-round exchanges to the GRAPH, not the corpus: the
-    # iterating frames are O(nodes), and at small node counts the session's
-    # corpus-scale shuffle width only buys task-launch + checkpoint overhead
-    # per round (measured: 34s -> ~3s at sf0.1 under local[16]/48).  ~1M
-    # nodes per partition, capped at the session default so a billion-node
-    # graph still uses the cluster-tuned width.  Pre-partitioning edges and
-    # nodes on their join keys with the SAME width lets every per-round join
-    # reuse the distribution — the only exchange left per round is the
-    # inflow aggregation's, which is repartitioned to the same width.
-    spark = triples.sparkSession
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nparts = max(1, min(default_parts, 1 + n // 1_000_000))
-    d2 = d.repartition(nparts, "subj").persist()
-    nodes2 = nodes.repartition(nparts, "name").persist()
-    d2.count()
-    nodes2.count()
-    d.unpersist()
-    nodes.unpersist()
-    base = (15 * scale) // (100 * n)
-    ranks = nodes2.select("name", "out_deg", F.lit(scale // n).alias("rank"))
-    # The dangling mass rides as a BROADCAST 1-row frame, not a per-round
-    # driver collect (one fewer job per round; same integer arithmetic,
-    # bit-identical result).  Lineage MUST still truncate every round:
-    # each round reads ``ranks`` three times (dangling agg, inflow join,
-    # rank update), so an uncheckpointed k-round window re-evaluates the
-    # chain 3^k-fold — measured 8.7s with a 3-round window vs 5.3s per-round
-    # at sf0.1 (the same blowup the oracle's AS MATERIALIZED CTEs prevent).
-    for i in range(iters):
-        ranks = truncate_lineage(ranks)
-        dangf = (
-            ranks.filter(F.col("out_deg") == 0)
-            .agg(
-                F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dang")
+    with LineageScope() as ls:
+        g = _directed(ls, triples)
+        if g is None:
+            return triples.sparkSession.createDataFrame(
+                [], "name string, pagerank long"
             )
-        )
-        inflow = (
-            d2.join(
-                ranks.filter(F.col("out_deg") > 0).withColumnRenamed(
-                    "name", "subj"
-                ),
-                "subj",
-            )
-            .select("obj", F.expr("rank DIV out_deg").alias("share"))
-            .repartition(nparts, "obj")
-            .groupBy(F.col("obj").alias("name"))
-            .agg(F.sum("share").alias("inflow"))
-        )
-        ranks = (
-            nodes2.join(inflow, "name", "left")
-            .crossJoin(F.broadcast(dangf))
-            .select(
-                "name",
-                "out_deg",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"85 * (coalesce(inflow, 0L) + dang DIV {n}L) DIV 100"
-                    )
-                ).cast("long").alias("rank"),
-            )
-        )
-    result = ranks.select("name", F.col("rank").alias("pagerank"))
-    result = truncate_lineage(result)
-    d2.unpersist()
-    nodes2.unpersist()
-    return result
+        d, nodes, n, nparts = g
+        ranks = _rank_rounds(ls, d, nodes, "1", n, iters, scale, nparts)
+        return ls.result(ranks.select("name", F.col("rank").alias("pagerank")))
 
 
 NT_BASE = "https://kg.example/"

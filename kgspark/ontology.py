@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kgspark import spec
+from kgspark.session import LineageScope
 
 
 def validate(triples: DataFrame, entities: DataFrame) -> DataFrame:
@@ -256,6 +257,42 @@ def _body_pairs(tp: DataFrame) -> DataFrame:
     )
 
 
+def _rules(
+    ls: LineageScope, triples: DataFrame, top_preds: int, min_support: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The mined rule frame both rule operators derive, plus what they read
+    again: (heads, body, rules).  ``heads`` is the pruned store as
+    (a, head_r, c), ``body`` the held :func:`_body_pairs` frame (computed
+    once, read by every consumer), and ``rules`` one row per (body_p,
+    body_q, head_r) with support ≥ ``min_support``: support, body_pairs and
+    confidence_micro."""
+    tp = ls.hold(_pruned_triples(triples, top_preds))
+    heads = tp.select(
+        F.col("subj").alias("a"), F.col("pred").alias("head_r"), F.col("obj").alias("c")
+    )
+    body = ls.hold(_body_pairs(tp))
+    body_pairs = body.groupBy("body_p", "body_q").agg(
+        F.count(F.lit(1)).cast("long").alias("body_pairs")
+    )
+    matched = (
+        body.join(heads, ["a", "c"])
+        .groupBy("body_p", "body_q", "head_r")
+        .agg(F.count(F.lit(1)).cast("long").alias("support"))
+        .filter(F.col("support") >= min_support)
+    )
+    rules = matched.join(body_pairs, ["body_p", "body_q"]).select(
+        "body_p",
+        "body_q",
+        "head_r",
+        "support",
+        "body_pairs",
+        F.expr("CAST(support * 1000000 DIV body_pairs AS BIGINT)").alias(
+            "confidence_micro"
+        ),
+    )
+    return heads, body, rules
+
+
 def rule_mining(
     triples: DataFrame,
     top_preds: int = RULE_TOP_PREDS,
@@ -278,42 +315,8 @@ def rule_mining(
     tiny predicate list, a middle-entity-keyed self-join, two hash
     aggregates.
     """
-    tp = _pruned_triples(triples, top_preds).persist()
-    body = _body_pairs(tp)
-    body_pairs = body.groupBy("body_p", "body_q").agg(
-        F.count(F.lit(1)).cast("long").alias("body_pairs")
-    )
-    matched = (
-        body.join(
-            tp.select(
-                F.col("subj").alias("a"),
-                F.col("pred").alias("head_r"),
-                F.col("obj").alias("c"),
-            ),
-            ["a", "c"],
-        )
-        .groupBy("body_p", "body_q", "head_r")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-        .filter(F.col("support") >= min_support)
-    )
-    out = matched.join(body_pairs, ["body_p", "body_q"]).select(
-        "body_p",
-        "body_q",
-        "head_r",
-        "support",
-        "body_pairs",
-        F.expr("CAST(support * 1000000 DIV body_pairs AS BIGINT)").alias(
-            "confidence_micro"
-        ),
-    )
-    # materialize the (small, O(top_preds³)-bounded) result so the
-    # corpus-sized pruned triple cache can be released before returning
-    # (review catch: tp otherwise stays pinned for the session).
-    from .session import truncate_lineage
-
-    out = truncate_lineage(out)
-    tp.unpersist()
-    return out
+    with LineageScope() as ls:
+        return ls.result(_rules(ls, triples, top_preds, min_support)[2])
 
 
 def rule_apply(
@@ -339,66 +342,27 @@ def rule_apply(
     predicted fact.  The store-side anti-join is the only corpus-keyed
     shuffle beyond the body join rule_mining already pays.
     """
-    tp = _pruned_triples(triples, top_preds).persist()
-    body = _body_pairs(tp)
-    body_pairs = body.groupBy("body_p", "body_q").agg(
-        F.count(F.lit(1)).cast("long").alias("body_pairs")
-    )
-    matched = (
-        body.join(
-            tp.select(
-                F.col("subj").alias("a"),
-                F.col("pred").alias("head_r"),
-                F.col("obj").alias("c"),
-            ),
-            ["a", "c"],
+    with LineageScope() as ls:
+        heads, body, rules = _rules(ls, triples, top_preds, min_support)
+        rules = rules.filter(F.col("confidence_micro") >= min_conf_micro).select(
+            "body_p", "body_q", "head_r", "confidence_micro"
         )
-        .groupBy("body_p", "body_q", "head_r")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-        .filter(F.col("support") >= min_support)
-    )
-    rules = (
-        matched.join(body_pairs, ["body_p", "body_q"])
-        .select(
-            "body_p",
-            "body_q",
-            "head_r",
-            F.expr("CAST(support * 1000000 DIV body_pairs AS BIGINT)").alias(
-                "confidence_micro"
-            ),
+        missing = body.join(F.broadcast(rules), ["body_p", "body_q"]).join(
+            heads, ["a", "head_r", "c"], "left_anti"
         )
-        .filter(F.col("confidence_micro") >= min_conf_micro)
-    )
-    cand = body.join(F.broadcast(rules), ["body_p", "body_q"])
-    missing = cand.join(
-        tp.select(
-            F.col("subj").alias("a"),
-            F.col("pred").alias("head_r"),
-            F.col("obj").alias("c"),
-        ),
-        ["a", "head_r", "c"],
-        "left_anti",
-    )
-    best = F.max(
-        F.struct("confidence_micro", "body_p", "body_q")
-    ).alias("best")
-    out = (
-        missing.groupBy("a", "head_r", "c")
-        .agg(best)
-        .select(
-            F.col("a").alias("subj"),
-            F.col("head_r").alias("pred"),
-            F.col("c").alias("obj"),
-            F.col("best.confidence_micro").alias("confidence_micro"),
-            F.col("best.body_p").alias("body_p"),
-            F.col("best.body_q").alias("body_q"),
+        best = F.max(F.struct("confidence_micro", "body_p", "body_q")).alias("best")
+        return ls.result(
+            missing.groupBy("a", "head_r", "c")
+            .agg(best)
+            .select(
+                F.col("a").alias("subj"),
+                F.col("head_r").alias("pred"),
+                F.col("c").alias("obj"),
+                F.col("best.confidence_micro").alias("confidence_micro"),
+                F.col("best.body_p").alias("body_p"),
+                F.col("best.body_q").alias("body_q"),
+            )
         )
-    )
-    from .session import truncate_lineage
-
-    out = truncate_lineage(out)
-    tp.unpersist()
-    return out
 
 
 def triple_support(triples: DataFrame) -> DataFrame:

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import cache, chunking, html_extract, ids, spec, web_extraction
+from .session import LineageScope
 
 
 def _norm_name(c: Column) -> Column:
@@ -537,32 +538,30 @@ def redirect_resolve(
     truncated per round; doubling makes a 64-hop chain cost 6 shuffles,
     the property linear frontier walks lose at crawl scale.
     """
-    from .session import truncate_lineage
-
-    e = redirects.select(
-        F.col("src_url").alias("src"), F.col("dst_url").alias("ptr")
-    ).distinct()
-    ptr = e.persist()
-    ptr.count()
-    srcs = ptr.select("src").distinct()
-    for _ in range(rounds):
-        ptr = truncate_lineage(ptr)
-        hop = ptr.select(F.col("src").alias("_hsrc"), F.col("ptr").alias("_hptr"))
-        ptr = ptr.join(hop, ptr["ptr"] == hop["_hsrc"], "left").select(
-            "src", F.coalesce("_hptr", "ptr").alias("ptr")
+    with LineageScope() as ls:
+        ptr = ls.hold(
+            redirects.select(
+                F.col("src_url").alias("src"), F.col("dst_url").alias("ptr")
+            ).distinct()
         )
-    return (
-        ptr.join(
-            srcs.select(F.col("src").alias("ptr"), F.lit(1).alias("_issrc")),
-            "ptr",
-            "left",
+        srcs = ptr.select("src").distinct()
+        for _ in range(rounds):
+            ptr = ls.cut(ptr)
+            hop = ptr.select(F.col("src").alias("_hsrc"), F.col("ptr").alias("_hptr"))
+            ptr = ptr.join(hop, ptr["ptr"] == hop["_hsrc"], "left").select(
+                "src", F.coalesce("_hptr", "ptr").alias("ptr")
+            )
+        return ls.result(
+            ptr.join(
+                srcs.select(F.col("src").alias("ptr"), F.lit(1).alias("_issrc")),
+                "ptr",
+                "left",
+            ).select(
+                F.col("src").alias("src_url"),
+                F.col("ptr").alias("final_url"),
+                F.col("_issrc").isNull().alias("is_resolved"),
+            )
         )
-        .select(
-            F.col("src").alias("src_url"),
-            F.col("ptr").alias("final_url"),
-            F.col("_issrc").isNull().alias("is_resolved"),
-        )
-    )
 
 
 def domain_stats(web_pages: DataFrame) -> DataFrame:

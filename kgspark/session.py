@@ -1,9 +1,12 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the lineage scope
+iterative operators run in.
 
 Single place where every entry point (tests, bench, __spark_entry__) gets its
 session, so the AQE / Arrow / shuffle settings that matter at 100 TB are
 applied uniformly.  On a real cluster the same builder is used via
-``spark-submit --py-files``; only ``master`` changes.
+``spark-submit --py-files``; only ``master`` changes.  :class:`LineageScope`
+is the single place that knows when a checkpoint or a persisted input may be
+released.
 """
 
 from __future__ import annotations
@@ -11,7 +14,23 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _default_driver_mem() -> str:
+    """Half the machine's RAM, capped at 64g: local mode runs every task in
+    the driver JVM, and a heap sized past physical memory gets the JVM
+    OOM-killed instead of collected."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    half_mib = int(line.split()[1]) // 2048
+                    return f"{min(64 * 1024, half_mib)}m"
+    except OSError:
+        pass
+    return "64g"
+
 
 # Defaults tuned for the sandbox (local[32], 128 GiB).  On a 1000-executor
 # cluster, shuffle.partitions should be ~2-3x total cores; AQE coalesces the
@@ -46,7 +65,9 @@ DEFAULT_CONFS: dict[str, str] = {
     # collapses into GC thrash at local[32] (measured: GCLocker retry storms,
     # 4x slowdown vs local[8]).  On a real cluster this maps to executor
     # memory instead.  Applies only when the JVM is launched by this builder.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()
+    ),
     # Reliable checkpoints (truncate_lineage with a checkpoint dir) write one
     # RDD checkpoint per BFS level / CC round; without this flag the files
     # outlive their RDDs for the whole application — unbounded growth on a
@@ -69,10 +90,70 @@ def truncate_lineage(df):
     or ``sparkContext.setCheckpointDir``, pointing at HDFS/S3 on a real
     cluster), iterative state is checkpointed there instead and survives
     executor loss.  Default behavior is unchanged when no dir is set.
+
+    Iterative operators do not call this directly: they cut through a
+    :class:`LineageScope`, which also releases the cuts when they return.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint()
     return df.localCheckpoint()
+
+
+class LineageScope:
+    """Lineage and cache bookkeeping of one iterative operator.
+
+    ``cut`` truncates lineage (:func:`truncate_lineage`), ``hold`` persists
+    an input the loop re-reads, ``adopt`` takes over the result of another
+    scoped operator this one calls, and ``result`` marks the frame the
+    operator returns, cutting it unless it is already one of the scope's
+    cuts.
+
+    The release rule: on exit every cut, hold and adopted frame is
+    released, except the result.  The result is the only frame that may
+    leave the scope, and because it is a cut it reads its own blocks, not
+    the ones released under it (a local checkpoint read after its blocks are
+    gone fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).  On an exception
+    the result is released too.
+
+    Local checkpoints are released by unpersisting their blocks; a reliable
+    checkpoint holds no blocks, and its files go with the ContextCleaner
+    (``spark.cleaner.referenceTracking.cleanCheckpoints``).
+    """
+
+    def __init__(self) -> None:
+        self._cuts: list[DataFrame] = []
+        self._held: list[DataFrame] = []
+        self._result: DataFrame | None = None
+
+    def cut(self, df: DataFrame) -> DataFrame:
+        df = truncate_lineage(df)
+        self._cuts.append(df)
+        return df
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        self._held.append(df.persist())
+        return df
+
+    def adopt(self, df: DataFrame) -> DataFrame:
+        self._cuts.append(df)
+        return df
+
+    def result(self, df: DataFrame) -> DataFrame:
+        if not any(df is c for c in self._cuts):
+            df = self.cut(df)
+        self._result = df
+        return df
+
+    def __enter__(self) -> "LineageScope":
+        return self
+
+    def __exit__(self, exc_type, *_) -> None:
+        keep = self._result if exc_type is None else None
+        for df in self._cuts:
+            if df is not keep:
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        for df in self._held:
+            df.unpersist()
 
 
 def get_spark(

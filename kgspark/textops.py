@@ -2154,7 +2154,9 @@ def boilerplate_strip(pages: DataFrame, text_col: str = "text") -> DataFrame:
     line_stats = exploded.groupBy("host", "line").agg(
         F.countDistinct("url").alias("_line_pages")
     )
-    host_stats = exploded.groupBy("host").agg(
+    # the denominator counts EVERY page of the host, whitespace-only ones
+    # included (``exploded`` has dropped those)
+    host_stats = base.groupBy("host").agg(
         F.countDistinct("url").alias("_host_pages")
     )
     boiler = (F.col("_line_pages") >= BOILER_MIN_PAGES) & (

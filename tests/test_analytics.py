@@ -1126,8 +1126,9 @@ def test_boilerplate_strip_boundaries(spark):
     """Every planted decision boundary in the host-pages fixture: site-wide
     nav/footer strips, the 30% ratio gate rejects a 2-of-7 line, the n>=2
     floor rejects a single-page promo, within-page repetition is never
-    boilerplate, host scoping protects cross-host shared lines, and a page
-    can strip to empty (sha of '')."""
+    boilerplate, host scoping protects cross-host shared lines, a page
+    can strip to empty (sha of ''), and a whitespace-only page counts
+    toward its host's page total."""
     import hashlib
 
     from kgspark import datagen, textops
@@ -1167,6 +1168,11 @@ def test_boilerplate_strip_boundaries(spark):
     # cross-host shared line survives on both hosts
     for u in ("https://a.test/x", "https://b.test/x"):
         assert out[u]["n_boiler_lines"] == 0, u
+    # f.test: the spaces-only page counts toward the host's pages, so the
+    # 2-of-7 sidebar stays (it would strip at 2-of-6)
+    r = out["https://f.test/p0"]
+    assert r["n_lines"] == 2 and r["n_boiler_lines"] == 0
+    assert r["cleaned_sha256"] == hashlib.sha256(b"F post 0.\nF sidebar").hexdigest()
 
 
 def test_keyphrases_hub_word_ranks_first(spark):

@@ -485,7 +485,7 @@ def test_stress_centrality_matches_python_reference(spark):
 
     from kgspark import graph as g
 
-    def py_stress(edges, sources, nodes):
+    def py_stress(edges, sources, nodes, max_depth):
         adj = {}
         for a, b in edges:
             adj.setdefault(a, set()).add(b)
@@ -498,6 +498,8 @@ def test_stress_centrality_matches_python_reference(spark):
             dq = deque([s])
             while dq:
                 v = dq.popleft()
+                if dist[v] == max_depth:
+                    continue  # nodes deeper than max_depth are not visited
                 for w in sorted(adj.get(v, ())):
                     if w not in dist:
                         dist[w] = dist[v] + 1
@@ -531,5 +533,21 @@ def test_stress_centrality_matches_python_reference(spark):
         for row in g.stress_centrality(triples, n_sources=8, max_depth=8).collect()
     }
     present = sorted({a for a, _ in edges} | {b for _, b in edges})
-    want = py_stress(edges, sorted(present)[:8], present)
+    want = py_stress(edges, sorted(present)[:8], present, max_depth=8)
     assert got == want
+    # where the depth cap binds: a 6-chain seen from c0 stops at c2
+    chain = [(f"c{i}", f"c{i + 1}") for i in range(5)]
+    got = {
+        row["name"]: row["stress"]
+        for row in g.stress_centrality(
+            spark.createDataFrame(
+                [(a, "r", b, "d") for a, b in chain],
+                ["subj", "pred", "obj", "doc_id"],
+            ),
+            n_sources=1,
+            max_depth=2,
+        ).collect()
+    }
+    names = [f"c{i}" for i in range(6)]
+    assert got == py_stress(chain, ["c0"], names, max_depth=2)
+    assert got["c1"] == 1
