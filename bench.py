@@ -8,7 +8,8 @@ Execution is forced with the noop sink (``df.write.format("noop")``) so every
 query pays its full scan/shuffle/UDF cost but nothing is collected to the
 driver — the same discipline a cluster job would have.
 
-Headline set: the flagship KG construction chain (documents corpus + the
+Headline set: the register rows of ``__spark_entry__`` flagged
+``headline`` — the flagship KG construction chain (documents corpus + the
 synthetic web_pages corpus end-to-end) plus the heaviest dedup / similarity /
 rollup operators.  A separate scaling run (``--scaling``) executes the
 flagship pipeline at local[8] and local[32] and reports N→4N scaling
@@ -31,29 +32,6 @@ if REPO_ROOT not in sys.path:
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# Queries from __spark_entry__.queries() to time at the bench scale.
-HEADLINE = [
-    "kg_triples",
-    "kg_entities",
-    "kg_entity_links",
-    "kg_chunks",
-    "web_triples",
-    "web_canonical_triples",
-    "dedup_exact",
-    "dedup_minhash_signatures",
-    "dedup_lsh_pairs",
-    "text_simhash",
-    "text_quality",
-    "graph_bfs_paths",
-    "text_bpe_token_counts",
-    "dedup_embedding_pairs",
-    "dedup_embedding_pairs_lsh",
-    "ann_cosine_topk",
-    "events_hourly",
-    "events_session_windows",
-]
-
-
 def _sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else 0.0
@@ -72,7 +50,6 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
     spark = get_spark(app_name="kgspark-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    qmap = entry.queries()
     # reps >= 5 so the artifact carries its own noise bar: this VM has
     # time-varying noisy-neighbor interference (identical configs swing
     # 1.2-1.5x run-to-run — see BENCH/BASELINE.md r4 drift analysis).
@@ -109,13 +86,13 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    for name in HEADLINE:
-        if name not in qmap:
+    for q in entry.REGISTER:
+        if not q.headline:
             continue
-        walls = _timed_reps(lambda: qmap[name](spark, sf_dir))
-        timings[name] = round(statistics.median(walls), 3)
-        mins[name] = round(min(walls), 3)
-        spreads[name] = round(max(walls) / max(min(walls), 1e-9), 2)
+        walls = _timed_reps(lambda: q.build(spark, sf_dir))
+        timings[q.name] = round(statistics.median(walls), 3)
+        mins[q.name] = round(min(walls), 3)
+        spreads[q.name] = round(max(walls) / max(min(walls), 1e-9), 2)
     total = round(sum(timings.values()), 3)
     spark.stop()
     return {

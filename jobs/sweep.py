@@ -2,9 +2,9 @@
 
 Mimics the round driver's CORRECTNESS_r*.json compare at an arbitrary SF:
 for each entry in `__spark_entry__.queries()`, run the Spark DataFrame and
-the `oracle_sql()` string over the same parquet tables (pre-registered as
-DuckDB views), then compare row count, schema (column names sorted), and a
-value hash computed over name-sorted columns and fully row-sorted values.
+the `oracle_sql()` string over the same parquet tables, then compare row
+count, schema (column names sorted), and a value hash over
+`__spark_entry__.value_lines` — the compare protocol the parity tests use.
 
 Usage:  python jobs/sweep.py [sf_dir] [query ...]
         (default sf_dir /root/testdata/sf0.01; no query args = all)
@@ -16,72 +16,36 @@ non-zero if any query is red.
 from __future__ import annotations
 
 import hashlib
+import importlib.util
 import json
 import os
 import sys
 
-import duckdb
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings", "web_pages",
-]
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _norm_cell(v) -> str:
-    # Matches tests/test_oracle_parity.py::_norm_cell — the one protocol.
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        if v != v:
-            return "NaN"
-        return f"{v:.6g}"
-    return str(v)
-
-
-def _canon(rows: list[tuple], cols: list[str]) -> tuple[list[str], str]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x1f".join(_norm_cell(r[i]) for i in order) for r in rows
-    )
-    h = hashlib.sha256("\x1e".join(lines).encode()).hexdigest()[:16]
-    return sorted(cols), h
+def _result(entry, rows: list[tuple], cols: list[str]) -> tuple[list[str], str]:
+    lines = entry.value_lines(rows, cols)
+    return sorted(cols), hashlib.sha256("\x1e".join(lines).encode()).hexdigest()[:16]
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import importlib.util
-
+    sys.path.insert(0, REPO_ROOT)
     spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+        "entry", os.path.join(REPO_ROOT, "__spark_entry__.py")
     )
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
 
-    from pyspark.sql import SparkSession
+    from kgspark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("sweep")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="sweep", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
+    con = entry.duck_views(sf_dir)
     qs = entry.queries()
     oracles = entry.oracle_sql()
     n_green = n_red = 0
@@ -93,23 +57,18 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
-            scols, shash = _canon(srows, sdf.columns)
+            scols, shash = _result(entry, srows, sdf.columns)
             rec["spark_rows"] = len(srows)
-            if name in oracles:
-                res = con.execute(oracles[name])
-                ocols_raw = [d[0] for d in res.description]
-                orows = res.fetchall()
-                ocols, ohash = _canon(orows, ocols_raw)
-                rec["oracle_rows"] = len(orows)
-                rec["rows_match"] = len(srows) == len(orows)
-                rec["schema_match"] = scols == ocols
-                rec["hash_match"] = shash == ohash
-                ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
-                if not rec["schema_match"]:
-                    rec["spark_cols"], rec["oracle_cols"] = scols, ocols
-            else:
-                rec["rows_only"] = True
-                ok = len(srows) >= 0
+            res = con.execute(oracles[name])
+            orows = res.fetchall()
+            ocols, ohash = _result(entry, orows, [d[0] for d in res.description])
+            rec["oracle_rows"] = len(orows)
+            rec["rows_match"] = len(srows) == len(orows)
+            rec["schema_match"] = scols == ocols
+            rec["hash_match"] = shash == ohash
+            ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
+            if not rec["schema_match"]:
+                rec["spark_cols"], rec["oracle_cols"] = scols, ocols
         except Exception as e:  # noqa: BLE001 - sweep must report, not die
             rec["err"] = f"{type(e).__name__}: {e}"[:300]
             ok = False
@@ -119,6 +78,7 @@ def main() -> int:
             n_red += 1
             reds.append(name)
         print(json.dumps(rec), flush=True)
+    spark.stop()
     print(json.dumps({"sf_dir": sf_dir, "green": n_green, "red": n_red, "red_queries": reds}))
     return 1 if n_red else 0
 

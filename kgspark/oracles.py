@@ -733,14 +733,6 @@ SELECT subj, pred, obj, confidence_micro, body_p, body_q FROM (
         f" AS n_members\nFROM l{LPA_ITERS}"
     )
 
-    q["kg_entity_type_counts"] = f"""
-WITH {TOK},
-{_M},
-{_ENTITIES}
-SELECT lower(entity_type) AS entity_type, count(*) AS n_entities
-FROM ent GROUP BY lower(entity_type)
-""".strip()
-
     q["kg_entity_links"] = f"""
 WITH {TOK},
 {_M},
@@ -1000,9 +992,9 @@ SELECT kg_doc_id,
 FROM tok
 """.strip()
 
-    # Gopher repetition profile (kgspark.textops.repetition_stats): the
+    # Gopher repetition profile (kgspark.textops.repetition_stats_arrow): the
     # oracle re-derives the tagged gram stream with DuckDB 1-based inclusive
-    # list slices (vs Spark's zip_with shifted-slice build) and the same
+    # list slices (vs the Arrow kernel's Python token tuples) and a
     # two-level count aggregation.  range(len - n + 1) is empty for short
     # docs, so <n-token documents emit no row for that n on both engines.
     ns_list = ", ".join(str(n) for n in REPETITION_NS)
@@ -1448,22 +1440,6 @@ SELECT kg_doc_id, n_tokens,
 FROM r
 """.strip()
 
-    q["text_language_id"] = f"""
-WITH {TOK}
-SELECT kg_doc_id,
-       round(len(list_filter(toks, x -> x IN ({stop_list}))) * 1.0 / len(toks), 6) AS en_score,
-       CASE WHEN len(list_filter(toks, x -> x IN ({stop_list}))) * 1.0 / len(toks) >= 0.05
-            THEN 'en' ELSE 'unknown' END AS predicted_lang
-FROM tok
-""".strip()
-
-    q["text_fingerprint"] = f"""
-WITH {TOK}
-SELECT kg_doc_id,
-       sha256(array_to_string(list_sort(list_distinct(toks)), ' ')) AS vocab_fingerprint
-FROM tok
-""".strip()
-
     # Readability (kgspark.textops.readability): independent restatement of
     # the letter-run / terminator-run / vowel-group proxies; both scores are
     # computed with the same association Spark uses so the doubles are
@@ -1509,11 +1485,6 @@ SELECT DISTINCT a.kg_doc_id AS doc_a, b.kg_doc_id AS doc_b
 FROM bands a
 JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
             AND a.kg_doc_id < b.kg_doc_id
-""".strip()
-
-    q["lang_rollup_counts"] = """
-SELECT coalesce(lang, 'ALL') AS lang, count(*) AS n_docs
-FROM documents GROUP BY ROLLUP(lang)
 """.strip()
 
     # W3 parity: sort-field whitelist, page-size clamp (5→10, 300→200),

@@ -328,10 +328,13 @@ def build(
     per branch.  ``reuse=True`` persists the extraction (memory, spill to
     disk), so it is computed exactly once per action — the in-memory analog
     of the stage tables ``materialize.run_pipeline`` writes between stages at
-    warehouse scale.  One cached extraction at a time: a repeated ``build``
-    unpersists the previous call's frame instead of accumulating cached RDDs
-    for the session lifetime (callers wanting cross-call reuse should
-    memoize the returned dict, as ``__spark_entry__`` does).
+    warehouse scale.  The persisted frame goes through
+    :func:`cache.keyed_persist`, an LRU of 8 slots keyed by plan hash.  The
+    UDF plans of two ``build`` calls do not hash equal even over the same
+    pages, so each call takes a slot of its own, and a frame is unpersisted
+    only when later persists push it out of the LRU.  Callers wanting
+    cross-call reuse memoize the returned dict, as ``__spark_entry__``'s
+    ``_web_built`` does; that memo is the only cross-call dedupe.
     """
     d = docs(web_pages, check_digest=check_digest)
     c = chunks(d)

@@ -93,68 +93,12 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality signals: length, mean token length, stopword ratio,
-    and Gopher-style repetition ratios (duplicate-line and duplicate-word-
-    bigram fractions — boilerplate/spam markers in pre-training filters).
-
-    The classic pre-training quality filters (C4/Gopher-style) re-expressed
-    as pure Catalyst projections.
-
-    SPEC TWIN: the shipped fast path is :func:`quality_score_arrow` (the
-    registered ``text_quality`` query uses it); this Catalyst formulation
-    is kept as the executable specification and is exceptAll-gated against
-    the kernel row-for-row in ``tests/test_twins.py``.
-    """
-    t = _toks(text_col)
-    stop = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    n_stop = F.size(F.filter(t, lambda x: F.array_contains(stop, x)))
-    lines = F.filter(
-        F.transform(F.split(F.col(text_col), "\n"), lambda x: F.trim(x)),
-        lambda x: x != "",
-    )
-    n_lines = F.size(lines)
-    dup_line_ratio = F.when(
-        n_lines > 0,
-        F.round((n_lines - F.size(F.array_distinct(lines))) / n_lines, 6),
-    ).otherwise(F.lit(0.0))
-    bigrams = _ngrams(t, 2)
-    n_bi = F.size(bigrams)
-    dup_bigram_ratio = F.when(
-        n_bi > 0,
-        F.round((n_bi - F.size(F.array_distinct(bigrams))) / n_bi, 6),
-    ).otherwise(F.lit(0.0))
-    # language-ID rides along: same stopword ratio drives the en/unknown
-    # heuristic (language_id()'s en_score == stopword_ratio), so the merged
-    # frame covers quality-scoring AND language-ID in one scan.
-    return docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
-        ids.doc_id(F.trim(F.col(text_col))).alias("kg_doc_id"),
-        F.size(t).cast("long").alias("n_tokens"),
-        F.round(F.length(F.trim(F.col(text_col))) / F.size(t), 6).alias(
-            "mean_token_len"
-        ),
-        F.round(n_stop / F.size(t), 6).alias("stopword_ratio"),
-        dup_line_ratio.alias("dup_line_ratio"),
-        dup_bigram_ratio.alias("dup_bigram_ratio"),
-        (
-            (F.size(t) >= 10)
-            & (n_stop / F.size(t) >= 0.05)
-            & (dup_line_ratio <= 0.3)
-            & (dup_bigram_ratio <= 0.2)
-        ).alias("passes_quality"),
-        F.when(F.round(n_stop / F.size(t), 6) >= 0.05, F.lit("en"))
-        .otherwise(F.lit("unknown"))
-        .alias("predicted_lang"),
-    )
-
-
 def _quality_counts_kernel():
-    """Batch kernel for :func:`quality_score`: per-document INTEGER counts
-    only (token / stopword / line / bigram cardinalities).  All division,
-    rounding, and thresholding stays in Catalyst — identical expressions to
-    the pure-Catalyst formulation — so the Arrow twin cannot drift from the
-    DuckDB oracle on float formatting; only the interpreted-HOF work
-    (split + set-distinct + stopword membership) moves to Python sets.
+    """Batch kernel for :func:`quality_score_arrow`: per-document INTEGER
+    counts only (token / stopword / line / bigram cardinalities).  All
+    division, rounding, and thresholding stays in Catalyst, so the kernel
+    cannot drift from the DuckDB oracle on float formatting; only the
+    split + set-distinct + stopword membership work moves to Python sets.
     """
     import pandas as pd
 
@@ -190,15 +134,18 @@ def _quality_counts_kernel():
 
 
 def quality_score_arrow(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow-kernel twin of :func:`quality_score` (same output, same oracle).
+    """Heuristic quality signals: length, mean token length, stopword ratio,
+    and Gopher-style repetition ratios (duplicate-line and duplicate-word-
+    bigram fractions — boilerplate/spam markers in pre-training filters),
+    plus the en/unknown language verdict the same stopword ratio drives.
 
-    Motivation (VERDICT r3 item 3): the Catalyst formulation's higher-order
+    Arrow kernel, not Catalyst: the Catalyst formulation's higher-order
     lambdas (stopword `filter`+`array_contains`, `array_distinct` on lines
-    and bigrams) are INTERPRETED, never codegen'd — the same pathology that
-    made pure-Catalyst minhash 7x slower than the Arrow kernel.  The kernel
-    (:func:`_quality_counts_kernel`) returns integer counts; this projection
-    applies byte-identical ratio/round/flag expressions to the Catalyst
-    version, so both twins hash-match the same DuckDB oracle.
+    and bigrams) are interpreted, never codegen'd — measured 2.20s vs 0.50s
+    best-of-3 at sf0.1 (round 4).  The kernel
+    (:func:`_quality_counts_kernel`) returns integer counts; the ratio,
+    round and flag arithmetic stays in Catalyst.  The DuckDB oracle
+    (``text_quality``) pins the result by value.
     """
     counts = _doc_text(docs, text_col).mapInPandas(
         _quality_counts_kernel(),
@@ -469,73 +416,6 @@ def _ngrams(t: Column, n: int) -> Column:
 
 
 REPETITION_NS = [2, 3, 5, 10]
-
-
-def repetition_stats(
-    docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
-    """Gopher-style per-document n-gram repetition signals, long format:
-    one row per (document, n) for n in :data:`REPETITION_NS` with
-
-      * ``top_ngram_frac`` — fraction of n-gram occurrences taken by the
-        single most frequent n-gram (Gopher's top-n-gram rule, n=2..4);
-      * ``dup_ngram_frac`` — fraction of occurrences belonging to n-grams
-        that appear more than once (Gopher's duplicate-n-gram rule, n=5..10).
-
-    ``quality_score`` carries the cheap narrow variants (distinct-count
-    ratios); this is the full frequency-profile version: one explode over
-    all four gram widths tagged in a single pass of the token array, then
-    two hash aggregates keyed on (row, n, gram).  Documents shorter than n
-    tokens emit no row for that n (explode of an empty gram list).
-
-    SPEC TWIN: the shipped fast path is :func:`repetition_stats_arrow` (the
-    registered ``text_repetition`` query uses it) — repetition is strictly
-    per-document, so a narrow zero-shuffle kernel beats this formulation's
-    gram explode, which shuffles ~4x the corpus token volume (measured at
-    sf0.1, BENCH/BASELINE.md round-5 section).  This distributed-aggregation
-    form is kept as the executable specification, exceptAll-gated against
-    the kernel in ``tests/test_twins.py``; it is also the shape to prefer if
-    single documents ever exceed one task's memory.
-
-    Per-row semantics (duplicate raw rows emit duplicate output rows), so
-    the grouping key is the caller's unique ``key_col``, not the
-    content-addressed id — same contract as the rest of the operator
-    family (see the TOK fragment note in kgspark.oracles).
-    """
-    t = _toks(text_col)
-
-    def _tag(n: int):
-        # NB: bind n OUTSIDE the lambda — a two-parameter lambda (even with
-        # a default) makes F.transform pass the ARRAY INDEX as the second
-        # argument, silently replacing the tag.
-        return lambda g: F.struct(F.lit(n).cast("long").alias("n"), g.alias("gram"))
-
-    tagged = F.flatten(
-        F.array(*[F.transform(_ngrams(t, n), _tag(n)) for n in REPETITION_NS])
-    )
-    base = docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(key_col).alias("_k"),
-        ids.doc_id(F.trim(F.col(text_col))).alias("kg_doc_id"),
-        F.explode(tagged).alias("g"),
-    )
-    cnt = base.groupBy(
-        "_k", "kg_doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    return (
-        cnt.groupBy("_k", "kg_doc_id", "n")
-        .agg(
-            F.sum("c").cast("long").alias("n_ngrams"),
-            F.max("c").alias("_top"),
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0)).alias("_dup"),
-        )
-        .select(
-            "kg_doc_id",
-            "n",
-            "n_ngrams",
-            F.round(F.col("_top") / F.col("n_ngrams"), 6).alias("top_ngram_frac"),
-            F.round(F.col("_dup") / F.col("n_ngrams"), 6).alias("dup_ngram_frac"),
-        )
-    )
 
 
 def collocations(
@@ -1114,9 +994,8 @@ def duplicate_spans(
 def _repetition_counts_kernel():
     """Batch kernel for :func:`repetition_stats_arrow`: per-(row, n) INTEGER
     counts only (total / top / duplicated n-gram occurrences) — all division
-    and rounding stays in Catalyst, identical expressions to the distributed
-    twin, so the kernel cannot drift from the DuckDB oracle on float
-    formatting.  n-grams are counted as token TUPLES (tokens cannot contain
+    and rounding stays in Catalyst, so the kernel cannot drift from the
+    DuckDB oracle on float formatting.  n-grams are counted as token TUPLES (tokens cannot contain
     whitespace, so tuple identity == joined-string identity)."""
     from collections import Counter
 
@@ -1146,15 +1025,23 @@ def _repetition_counts_kernel():
 
 
 def repetition_stats_arrow(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow-kernel twin of :func:`repetition_stats` (same output, same
-    oracle) — and the SHIPPED path: repetition is a strictly per-document
-    profile, so the scalable shape is a narrow zero-shuffle pass, not the
-    distributed twin's gram explode (which shuffles ~4x the corpus token
-    volume through two hash aggregates).  Measured at sf0.1, interleaved
-    same-session best-of-3: explode twin 18.70s median / 7.46s min vs this
-    kernel 0.80s median — see BENCH/BASELINE.md round-5 new-operator
-    section.  exceptAll-gated against the distributed spec twin in
-    tests/test_twins.py."""
+    """Gopher-style per-document n-gram repetition signals, long format:
+    one row per (document, n) for n in :data:`REPETITION_NS` with
+
+      * ``top_ngram_frac`` — fraction of n-gram occurrences taken by the
+        single most frequent n-gram (Gopher's top-n-gram rule, n=2..4);
+      * ``dup_ngram_frac`` — fraction of occurrences belonging to n-grams
+        that appear more than once (Gopher's duplicate-n-gram rule, n=5..10).
+
+    Documents shorter than n tokens emit no row for that n.  Per-row
+    semantics: duplicate raw rows emit duplicate output rows.
+
+    Repetition is strictly per-document, so the shape is a narrow
+    zero-shuffle Arrow pass.  A distributed gram explode shuffles ~4x the
+    corpus token volume through two hash aggregates: measured at sf0.1,
+    18.70s median vs 0.80s for this kernel (BENCH/BASELINE.md round-5
+    new-operator section).  The DuckDB oracle (``text_repetition``) pins
+    the result by value."""
     counts = _doc_text(docs, text_col).mapInPandas(
         _repetition_counts_kernel(),
         schema=(

@@ -20,7 +20,7 @@ from __future__ import annotations
 import hashlib
 from functools import lru_cache
 
-from . import datagen, html_extract, refimpl, spec
+from . import datagen, html_extract, oracles, refimpl, spec
 
 WEB_N = 160
 WEB_SEED = 42
@@ -1408,13 +1408,29 @@ def build() -> dict[str, str]:
         "web_graph_components": _values(
             comp_rows, ["name", "component_id", "n_members"], ["s", "s", "i"]
         ),
-        "web_status_counts": _values(
-            [("PROCESSED", n_docs), ("ALL", n_docs)],
-            ["status", "n_docs"],
-            ["s", "i"],
-        ),
-        "web_entity_type_counts": _values(
-            sorted(type_counts.items()), ["entity_type", "n_entities"], ["s", "i"]
+        # the two src-tagged unions: web-pipeline golden rows next to the
+        # same count over the documents table
+        "status_lang_rollup": _values(
+            [("status", "PROCESSED", n_docs), ("status", "ALL", n_docs)],
+            ["src", "label", "n_docs"],
+            ["s", "s", "i"],
+        )
+        + """
+UNION ALL
+SELECT 'lang' AS src, coalesce(lang, 'ALL') AS label, count(*) AS n_docs
+FROM documents GROUP BY ROLLUP(lang)""",
+        "entity_type_counts": f"""
+WITH {oracles.TOK},
+{oracles._M},
+{oracles._ENTITIES}
+SELECT 'documents' AS src, lower(entity_type) AS entity_type, count(*) AS n_entities
+FROM ent GROUP BY lower(entity_type)
+UNION ALL
+"""
+        + _values(
+            [("web", t, n) for t, n in type_counts.items()],
+            ["src", "entity_type", "n_entities"],
+            ["s", "s", "i"],
         ),
         "web_ontology_check": _ontology_check_sql(triple_rows, ent_rows),
         "web_ontology_rollup": f"""

@@ -56,7 +56,7 @@ def test_repetition_stats_hand_counts(spark):
     # "a b a b c" -> 2-grams [a b, b a, a b, b c]: top 2/4, dup 2/4;
     # 3-grams [a b a, b a b, a b c]: top 1/3, dup 0.
     docs = spark.createDataFrame([(1, "a b a b c")], ["doc_id", "text"])
-    got = {r["n"]: r for r in textops.repetition_stats(docs).collect()}
+    got = {r["n"]: r for r in textops.repetition_stats_arrow(docs).collect()}
     assert got[2]["n_ngrams"] == 4
     assert got[2]["top_ngram_frac"] == 0.5 and got[2]["dup_ngram_frac"] == 0.5
     assert got[3]["top_ngram_frac"] == 0.333333 and got[3]["dup_ngram_frac"] == 0.0
@@ -69,7 +69,7 @@ def test_repetition_stats_per_row_duplicates(spark):
     docs = spark.createDataFrame(
         [(1, "x y x y"), (2, "x y x y")], ["doc_id", "text"]
     )
-    rows = [r for r in textops.repetition_stats(docs).collect() if r["n"] == 2]
+    rows = [r for r in textops.repetition_stats_arrow(docs).collect() if r["n"] == 2]
     assert len(rows) == 2
     assert all(r["n_ngrams"] == 3 for r in rows)
 

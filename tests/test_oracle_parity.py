@@ -7,10 +7,8 @@ compare row count, column names, and an order-insensitive value hash.
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
 from .conftest import REPO_ROOT, SF_BENCH, SF_UNIT
@@ -23,38 +21,7 @@ _spec = importlib.util.spec_from_file_location(
 entry_mod = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(_spec and entry_mod)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _duck(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
-
-
-def _norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.6g}"
-    return str(v)
-
-
-def _value_set(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(_norm_cell(r[i]) for i in order) for r in rows)
-
-
-ORACLED = sorted(set(entry_mod.queries()) & set(entry_mod.oracle_sql()))
+ORACLED = sorted(entry_mod.queries())  # every query has one: tests/test_register.py
 
 
 def _check_parity(spark, name: str, sf_dir: str) -> None:
@@ -63,7 +30,7 @@ def _check_parity(spark, name: str, sf_dir: str) -> None:
     spark_rows = sdf.collect()
     spark_cols = sdf.columns
 
-    con = _duck(sf_dir)
+    con = entry_mod.duck_views(sf_dir)
     res = con.execute(entry_mod.oracle_sql()[name])
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
@@ -74,8 +41,8 @@ def _check_parity(spark, name: str, sf_dir: str) -> None:
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
     )
-    sv = _value_set([tuple(r) for r in spark_rows], spark_cols)
-    dv = _value_set(duck_rows, duck_cols)
+    sv = entry_mod.value_lines([tuple(r) for r in spark_rows], spark_cols)
+    dv = entry_mod.value_lines(duck_rows, duck_cols)
     if sv != dv:
         diff = [(a, b) for a, b in zip(sv, dv) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
@@ -162,7 +129,7 @@ def test_oracle_dtype_parity(spark, name):
     sdf = entry_mod.queries()[name](spark, SF_UNIT)
     spark_types = dict(sdf.dtypes)
 
-    con = _duck(SF_UNIT)
+    con = entry_mod.duck_views(SF_UNIT)
     desc = con.execute(
         "DESCRIBE " + entry_mod.oracle_sql()[name]
     ).fetchall()

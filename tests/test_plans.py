@@ -148,7 +148,7 @@ def test_quality_scoring_no_row_python(spark):
     (2.20s -> 0.50s best-of-3 at sf0.1, round-4 bake-off)."""
     plan = _plan(spark, "text_quality")
     assert "BatchEvalPython" not in plan, "text_quality: row-at-a-time Python"
-    # the twin keeps exactly one Arrow stage over the pruned (id, text) pair
+    # the kernel keeps exactly one Arrow stage over the pruned (id, text) pair
     assert plan.count("MapInPandas") <= 1
 
 
