@@ -31,6 +31,7 @@ if REPO_ROOT not in sys.path:
 from kgspark import (  # noqa: E402
     bpe,
     bpe_oracle,
+    cache,
     canon,
     chunking,
     datagen,
@@ -94,18 +95,12 @@ def _pick(src: QueryFn, *exprs: str) -> QueryFn:
     return lambda spark, sf_dir: src(spark, sf_dir).selectExpr(*exprs)
 
 
-_WEB_BUILT_CACHE: dict[str, dict[str, DataFrame]] = {}
-
-
 def _web_built(spark: SparkSession) -> dict[str, DataFrame]:
-    # memoized per SparkSession: every web_* query reuses ONE persisted
+    # memoized per application: every web_* query reuses ONE persisted
     # extraction instead of re-building (and re-caching) the chain per call.
-    key = spark.sparkContext.applicationId
-    if key not in _WEB_BUILT_CACHE:
-        _WEB_BUILT_CACHE.clear()
-        web = datagen.web_pages(spark, web_oracles.WEB_N, web_oracles.WEB_SEED)
-        _WEB_BUILT_CACHE[key] = pipeline.build(web)
-    return _WEB_BUILT_CACHE[key]
+    return cache.memo(spark, "web_built", lambda: pipeline.build(
+        datagen.web_pages(spark, web_oracles.WEB_N, web_oracles.WEB_SEED)
+    ))
 
 
 def _built(part: str) -> QueryFn:

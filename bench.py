@@ -44,6 +44,7 @@ def _force(df) -> int:
 
 
 def run_bench(sf_dir: str, cpus: str) -> dict:
+    from kgspark import cache
     from kgspark.session import get_spark
     import __spark_entry__ as entry
 
@@ -66,7 +67,7 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
         for _ in range(reps):
             # full cost per rep: drop the memoized web build + all cached
             # RDDs so a rep never times a fold-from-cache shortcut.
-            entry._WEB_BUILT_CACHE.clear()
+            cache.clear()
             spark.catalog.clearCache()
             df = make_df()
             t0 = time.perf_counter()

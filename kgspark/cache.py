@@ -1,5 +1,11 @@
-"""Session- and plan-keyed persist registry for operators that cache an
-upstream frame.
+"""The cross-call owner of persisted frames: a session- and plan-keyed
+persist registry for operators that cache an upstream frame, and a
+per-application memo of built values.
+
+The one release rule of the package: a frame that lives as long as one call
+is held in a :class:`kgspark.session.LineageScope`; a frame that a returned
+lazy plan still reads after the call is registered here.  Nothing else in
+``kgspark`` persists, checkpoints or unpersists.
 
 ``keyed_persist(df, name)`` persists ``df`` (MEMORY_AND_DISK) under the key
 ``(applicationId, name, df.semanticHash())`` and returns the registered frame.
@@ -18,24 +24,33 @@ cache entry (bench reps do exactly that), the frame is re-persisted on the
 next request instead of silently recomputing per downstream branch.
 Thread-safe via a module lock.
 
+``memo(spark, name, make)`` keeps one built value per name for the current
+application (the entry's web build: every ``web_*`` query reads one
+extraction).  :func:`clear` empties the memo and the LRU and unpersists what
+the LRU registered.
+
 CONTRACT: inputs must be immutable for the key's lifetime.  The key is a
 PLAN hash — two semantically-equal plans over a path whose files were
 rewritten in between would alias to one (stale) cached frame.  Every
 current caller reads immutable inputs (seeded datagen, sf-dir parquet);
 an operator over warehouse tables that are rewritten in place must NOT
-route through this registry (persist locally and unpersist when done).
+route through this registry (hold the frame in a ``LineageScope``).
 """
 
 from __future__ import annotations
 
 import threading
 from collections import OrderedDict
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _CAP = 8
-_LOCK = threading.Lock()
+# re-entrant: a memo's build may itself call keyed_persist
+_LOCK = threading.RLock()
 _REG: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+_MEMO: dict[tuple[str, str], Any] = {}
 
 
 def _is_cached(df: DataFrame) -> bool:
@@ -44,6 +59,13 @@ def _is_cached(df: DataFrame) -> bool:
         return bool(lvl.useMemory or lvl.useDisk)
     except Exception:
         return False
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # the frame's session is gone — nothing to release
 
 
 def keyed_persist(df: DataFrame, name: str) -> DataFrame:
@@ -76,9 +98,27 @@ def keyed_persist(df: DataFrame, name: str) -> DataFrame:
             return df  # session died mid-call — degrade to uncached
         _REG[key] = df
         while len(_REG) > _CAP:
-            _, victim = _REG.popitem(last=False)
-            try:
-                victim.unpersist()
-            except Exception:
-                pass  # victim's session is gone — nothing to release
+            _unpersist(_REG.popitem(last=False)[1])
         return df
+
+
+def memo(spark: SparkSession, name: str, make: Callable[[], Any]) -> Any:
+    """``make()``'s value, built once per application and ``name``; entries
+    of an earlier (stopped) application are dropped on the next build."""
+    app_id = spark.sparkContext.applicationId
+    with _LOCK:
+        if (app_id, name) not in _MEMO:
+            for key in [k for k in _MEMO if k[0] != app_id]:
+                del _MEMO[key]
+            _MEMO[(app_id, name)] = make()
+        return _MEMO[(app_id, name)]
+
+
+def clear() -> None:
+    """Empty the memo and the LRU, unpersisting every registered frame."""
+    with _LOCK:
+        victims = list(_REG.values())
+        _REG.clear()
+        _MEMO.clear()
+    for df in victims:
+        _unpersist(df)

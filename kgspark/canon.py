@@ -291,8 +291,12 @@ def canonical_map(
     the lexicographically smallest member.  Source is EITHER an entity
     table (names derived here) OR a precomputed ``names`` frame — a caller
     that also needs the distinct-name working set (the warehouse full
-    rebuild persists it for the canon_names/canon_bands state writes)
+    rebuild holds it for the canon_names/canon_bands state writes)
     passes ``names`` alone and shares ONE entity-table scan.
+
+    Runs in one :class:`~kgspark.session.LineageScope`: the returned map is
+    a cut, and the component labels it was built from are released when
+    the call returns.
     """
     if (entity_table is None) == (names is None):
         raise ValueError("pass exactly one of entity_table / names")
@@ -304,19 +308,20 @@ def canonical_map(
         .union(alias_edges(spark, names))
         .distinct()
     )
-    comp = connected_components(pairs)
-    mapped = _rep_map(spark, comp, names)
-    # Singletons: names not in any component map to themselves.
-    singles = names.join(
-        comp, names["name"] == comp["node"], "left_anti"
-    ).select(
-        F.col("name").alias("entity_name"),
-        F.col("name").alias("canonical_name"),
-    )
-    out = mapped.union(singles)
-    return out.withColumn(
-        "canonical_id", ids.canonical_id(F.col("canonical_name"))
-    )
+    with LineageScope() as ls:
+        comp = ls.adopt(connected_components(pairs))
+        mapped = _rep_map(spark, comp, names)
+        # Singletons: names not in any component map to themselves.
+        singles = names.join(
+            comp, names["name"] == comp["node"], "left_anti"
+        ).select(
+            F.col("name").alias("entity_name"),
+            F.col("name").alias("canonical_name"),
+        )
+        out = mapped.union(singles)
+        return ls.result(
+            out.withColumn("canonical_id", ids.canonical_id(F.col("canonical_name")))
+        )
 
 
 def _jaccard_verified(cand: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
@@ -334,6 +339,7 @@ def incremental_update(
     old_map: DataFrame,
     old_names: DataFrame,
     old_bands: DataFrame,
+    ls: LineageScope,
     name_col: str = "entity_name",
 ) -> dict:
     """Delta canonicalization: pair edges are generated ONLY for names the
@@ -357,28 +363,25 @@ def incremental_update(
     Returns ``{"map": full updated map, "new_names": (name, nkey) delta,
     "bands_new": (name, band_key) delta, "changed": bool (any OLD member
     relabeled — old triples need a canonical rewrite only then),
-    "n_new": int}``.
+    "n_new": int}``.  The frames are held in ``ls``, the caller's scope
+    (one ``run_pipeline`` batch), so they stay readable until it exits and
+    are released with it.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    new_names = (
+    new_names = ls.hold(
         distinct_names(batch_entity_table, name_col)
         .join(old_names.select("name"), "name", "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    bands_new = ls.hold(name_bands(new_names))
     n_new = new_names.count()
     old_map = old_map.select("entity_name", "canonical_name")
     if n_new == 0:
-        new_names.unpersist()
         out = old_map.withColumn(
             "canonical_id", ids.canonical_id(F.col("canonical_name"))
         )
         return {
             "map": out,
-            "new_names": new_names.limit(0),
-            "bands_new": new_names.limit(0).select(
-                "name", F.lit("").alias("band_key")
-            ),
+            "new_names": new_names,
+            "bands_new": bands_new,
             "changed": False,
             "n_new": 0,
         }
@@ -386,7 +389,6 @@ def incremental_update(
     all_names = old_names.select("name", "nkey").union(
         new_names.select("name", "nkey")
     )
-    bands_new = name_bands(new_names).persist(StorageLevel.MEMORY_AND_DISK)
     all_bands = old_bands.select("name", "band_key").union(bands_new)
 
     # LSH: probe new names into every bucket (old state + this delta) —
@@ -437,7 +439,7 @@ def incremental_update(
         F.least("entity_name", "canonical_name").alias("name_a"),
         F.greatest("entity_name", "canonical_name").alias("name_b"),
     )
-    comp = connected_components(edges.union(star).distinct())
+    comp = ls.adopt(connected_components(edges.union(star).distinct()))
 
     relabeled = _rep_map(spark, comp, all_names)
     # New singletons map to themselves — minus names the old map already

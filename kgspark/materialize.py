@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import canon, pipeline
+from .session import LineageScope
 
 STATUS_PROCESSED = "PROCESSED"  # storage/mod.rs:38-62 status vocabulary
 STATUS_PENDING = "PENDING"
@@ -627,82 +628,80 @@ def neardup_filter_batch(
     (kg_doc_id, status 'new' | 'dup_in_batch' | 'dup_of_indexed', dup_of).
     A batch member whose representative matched the index reports
     'dup_in_batch' against the representative (one hop, documented).
+    The status frame is a cut and the only frame the call leaves persisted:
+    the signatures and clusters are released on return, also on an
+    exception.
     """
     from . import textops
 
-    sig = textops.minhash_shingles(docs, text_col).dropDuplicates(
-        ["kg_doc_id"]
-    )
-    sig = sig.persist()
-    clusters = textops.dedup_clusters(docs, text_col, threshold)
-    reps = clusters.filter(F.col("is_representative")).select("kg_doc_id")
-    rep_sig = sig.join(reps, "kg_doc_id").persist()
-    rep_bands = textops.band_hashes(rep_sig)
+    with LineageScope() as ls:
+        sig = ls.hold(
+            textops.minhash_shingles(docs, text_col).dropDuplicates(["kg_doc_id"])
+        )
+        clusters = ls.adopt(textops.dedup_clusters(docs, text_col, threshold))
+        reps = clusters.filter(F.col("is_representative")).select("kg_doc_id")
+        rep_sig = ls.hold(sig.join(reps, "kg_doc_id"))
+        rep_bands = textops.band_hashes(rep_sig)
 
-    spark = docs.sparkSession
-    if wh.exists("neardup_bands"):
-        idx_bands = wh.read("neardup_bands").select(
-            "band", "band_hash", F.col("kg_doc_id").alias("idx_doc_id")
-        )
-        cand = (
-            rep_bands.join(idx_bands, ["band", "band_hash"])
-            .select("kg_doc_id", "idx_doc_id")
-            .distinct()
-        )
-        idx_sh = wh.read("neardup_shingles").select(
-            F.col("kg_doc_id").alias("idx_doc_id"),
-            F.col("shingles").alias("idx_shingles"),
-        )
-        matched = (
-            cand.join(rep_sig.select("kg_doc_id", "shingles"), "kg_doc_id")
-            .join(idx_sh, "idx_doc_id")
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.size(F.array_intersect("shingles", "idx_shingles"))
-                    / F.size(F.array_union("shingles", "idx_shingles")),
-                    6,
-                ),
+        if wh.exists("neardup_bands"):
+            idx_bands = wh.read("neardup_bands").select(
+                "band", "band_hash", F.col("kg_doc_id").alias("idx_doc_id")
             )
-            .filter(F.col("jaccard") >= threshold)
-            .groupBy("kg_doc_id")
-            .agg(F.min("idx_doc_id").alias("dup_of_idx"))
+            cand = (
+                rep_bands.join(idx_bands, ["band", "band_hash"])
+                .select("kg_doc_id", "idx_doc_id")
+                .distinct()
+            )
+            idx_sh = wh.read("neardup_shingles").select(
+                F.col("kg_doc_id").alias("idx_doc_id"),
+                F.col("shingles").alias("idx_shingles"),
+            )
+            matched = (
+                cand.join(rep_sig.select("kg_doc_id", "shingles"), "kg_doc_id")
+                .join(idx_sh, "idx_doc_id")
+                .withColumn(
+                    "jaccard",
+                    F.round(
+                        F.size(F.array_intersect("shingles", "idx_shingles"))
+                        / F.size(F.array_union("shingles", "idx_shingles")),
+                        6,
+                    ),
+                )
+                .filter(F.col("jaccard") >= threshold)
+                .groupBy("kg_doc_id")
+                .agg(F.min("idx_doc_id").alias("dup_of_idx"))
+            )
+        else:
+            matched = docs.sparkSession.createDataFrame(
+                [], "kg_doc_id string, dup_of_idx string"
+            )
+
+        # The result is a cut, taken BEFORE the index append: the status
+        # plan reads the index files, and anything weaker than a checkpoint
+        # re-computes it after the append (a persist is invalidated and
+        # recompiled when the frames under it are released), at which point
+        # every new doc "matches" itself in the now-updated index.
+        status = ls.result(
+            clusters.join(matched, "kg_doc_id", "left").select(
+                "kg_doc_id",
+                F.when(~F.col("is_representative"), F.lit("dup_in_batch"))
+                .when(F.col("dup_of_idx").isNotNull(), F.lit("dup_of_indexed"))
+                .otherwise(F.lit("new"))
+                .alias("status"),
+                F.coalesce(
+                    "dup_of_idx",
+                    F.when(~F.col("is_representative"), F.col("cluster_id")),
+                ).alias("dup_of"),
+            )
         )
-    else:
-        matched = spark.createDataFrame(
-            [], "kg_doc_id string, dup_of_idx string"
+        survivors = status.filter(F.col("status") == "new").select("kg_doc_id")
+        wh.append("neardup_bands", rep_bands.join(survivors, "kg_doc_id"), run_id)
+        wh.append(
+            "neardup_shingles",
+            rep_sig.select("kg_doc_id", "shingles").join(survivors, "kg_doc_id"),
+            run_id,
         )
-
-    status = clusters.join(matched, "kg_doc_id", "left").select(
-        "kg_doc_id",
-        F.when(~F.col("is_representative"), F.lit("dup_in_batch"))
-        .when(F.col("dup_of_idx").isNotNull(), F.lit("dup_of_indexed"))
-        .otherwise(F.lit("new"))
-        .alias("status"),
-        F.coalesce(
-            "dup_of_idx",
-            F.when(~F.col("is_representative"), F.col("cluster_id")),
-        ).alias("dup_of"),
-    )
-    # Cut lineage BEFORE the index append: the status plan reads the index
-    # files, and anything weaker than checkpointing re-computes it after the
-    # append (a persist is invalidated-and-recompiled when its parent
-    # frames unpersist below), at which point every new doc "matches"
-    # itself in the now-updated index.
-    from .session import truncate_lineage
-
-    status = truncate_lineage(status)
-
-    survivors = status.filter(F.col("status") == "new").select("kg_doc_id")
-    wh.append("neardup_bands", rep_bands.join(survivors, "kg_doc_id"), run_id)
-    wh.append(
-        "neardup_shingles",
-        rep_sig.select("kg_doc_id", "shingles").join(survivors, "kg_doc_id"),
-        run_id,
-    )
-    sig.unpersist()
-    rep_sig.unpersist()
-    return status
+        return status
 
 
 def docs_by_track_id(status_table: DataFrame, track_id: str) -> DataFrame:
@@ -950,8 +949,6 @@ def _run_pipeline_locked(
     check_digest: bool,
     neardup: bool = False,
 ) -> dict:
-    from pyspark.storagelevel import StorageLevel
-
     t0 = time.perf_counter()
     _cleanup_uncommitted(wh)
     input_obs = None
@@ -977,26 +974,20 @@ def _run_pipeline_locked(
             "input_sha"]
     if check_digest:
         cols += ["text", "text_sha256"]  # golden columns for the digest gate
-    # persist BEFORE the digest gate: the gate's collect() is an action, and
-    # an unpersisted frame would run the extraction UDF over the whole
-    # corpus twice (once for the gate, again for the first fold action).
-    # Every persisted frame is released in the finally block — a digest-gate
-    # AssertionError (or any stage failure) must not leak MEMORY_AND_DISK
-    # caches for the session lifetime.
-    persisted: list[DataFrame] = []
-    ex = (
-        pipeline.extract_docs(wp)
-        .select(*cols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    persisted.append(ex)
-    try:
-        # Full materializing action FIRST: fills the persisted cache in one
+    # Every frame the batch persists or cuts lives in ONE scope, released
+    # when the batch returns or fails: a digest-gate AssertionError (or any
+    # stage failure) must not leak caches for the session lifetime.  ex is
+    # held BEFORE the digest gate: the gate's collect() is an action, and an
+    # unheld frame would run the extraction UDF over the whole corpus twice
+    # (once for the gate, again for the first fold action).
+    with LineageScope() as ls:
+        ex = ls.hold(pipeline.extract_docs(wp).select(*cols))
+        # Full materializing action FIRST: fills the held cache in one
         # pass and (when resuming) finalizes the input-count observation —
         # the digest gate's limit(1) must never be the chain's first action
         # or the observation would report a partial count.  On the
         # non-resume path (no seen_inputs, input_obs is None) the count is
-        # NOT load-bearing for any metric — it only warms the persist the
+        # NOT load-bearing for any metric — it only warms the hold the
         # first stage write would otherwise fill; a refactor may skip it
         # there, but must keep it ordered before the digest gate whenever
         # an observation exists.
@@ -1020,8 +1011,7 @@ def _run_pipeline_locked(
         if wh.exists("doc_status"):
             existing = wh.read("doc_status").select("doc_id")
             d_new = d_new.join(existing, "doc_id", "left_anti")  # J1 resume
-        d_new = d_new.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(d_new)
+        d_new = ls.hold(d_new)
         n_todo = d_new.count()
 
         n_neardup = 0
@@ -1031,15 +1021,13 @@ def _run_pipeline_locked(
             # the manifest commit sweeps them with the rest of the run).
             # d_new's doc_id == textops' content-addressed kg_doc_id over
             # the (already-trimmed) content column by construction.
-            nd = neardup_filter_batch(wh, d_new, run_id, text_col="content")
+            nd = ls.adopt(
+                neardup_filter_batch(wh, d_new, run_id, text_col="content")
+            )
             dup_ids = nd.filter(F.col("status") != "new").select(
                 F.col("kg_doc_id").alias("doc_id")
             )
-            kept = d_new.join(dup_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            persisted.append(kept)
-            d_new = kept
+            d_new = ls.hold(d_new.join(dup_ids, "doc_id", "left_anti"))
             n_kept = d_new.count()
             n_neardup = n_todo - n_kept
             n_todo = n_kept
@@ -1047,8 +1035,7 @@ def _run_pipeline_locked(
         stage_metrics: dict[str, dict] = {}
         if n_todo > 0:
             c = pipeline.chunks(d_new)
-            x = pipeline.extracted_chunks(c).persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(x)
+            x = ls.hold(pipeline.extracted_chunks(c))
             e = pipeline.entities(x)
             r = pipeline.relations(x, e)
             t = pipeline.triples(r)
@@ -1072,12 +1059,10 @@ def _run_pipeline_locked(
         n_errors = stage_metrics["errors"]["n_rows"]
 
         # tier-1 state: record every successfully extracted page.  Lineage
-        # is truncated first — the frame's plan reads the seen_inputs table
+        # is cut first — the frame's plan reads the seen_inputs table
         # (via the prefilter anti-join), and appending to a table a running
         # job's lineage reads is the documented read-after-write hazard.
-        from .session import truncate_lineage
-
-        seen_new = truncate_lineage(
+        seen_new = ls.cut(
             ex.filter(
                 F.col("extract_error").isNull()
                 & F.col("input_sha").isNotNull()
@@ -1087,7 +1072,7 @@ def _run_pipeline_locked(
 
         t_canon = time.perf_counter()
         map_fp = _run_canonicalization(
-            spark, wh, run_id, n_todo, stage_metrics, persisted
+            spark, wh, run_id, n_todo, stage_metrics, ls
         )
         if "canonical_map" in stage_metrics:
             # stage wall time next to n_new_names: the incremental-cost
@@ -1114,12 +1099,6 @@ def _run_pipeline_locked(
 
         wh.mutate_manifest(_append)
         return entry
-    finally:
-        for df in persisted:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to release
 
 
 def _run_canonicalization(
@@ -1128,7 +1107,7 @@ def _run_canonicalization(
     run_id: str,
     n_todo: int,
     stage_metrics: dict,
-    persisted: list,
+    ls: LineageScope,
 ) -> str | None:
     """Canonicalization stage of :func:`run_pipeline` — incremental by delta,
     crash-safe by manifest fingerprint.
@@ -1177,73 +1156,48 @@ def _run_canonicalization(
             wh.read("canonical_map"),
             wh.read("canon_names").select("name", "nkey"),
             wh.read("canon_bands").select("name", "band_key"),
+            ls,
         )
-        persisted.extend([res["new_names"], res["bands_new"]])
         if res["n_new"] == 0:
-            # nothing new under canonicalization: keep the stored map and
-            # append just this batch's canonical triples
-            if n_todo > 0:
-                batch_t = (
-                    wh.read("triples")
-                    .filter(F.col("run_id") == run_id)
-                    .drop("run_id")
-                )
-                stage_metrics["canonical_triples"] = wh.append(
-                    "canonical_triples",
-                    canon.canonical_triples(batch_t, wh.read("canonical_map")),
-                    run_id,
-                )
+            # nothing new under canonicalization: keep the stored map
             stage_metrics["canonical_map"] = {
                 "table": "canonical_map",
-                "incremental": True,
-                "n_new_names": 0,
                 "unchanged": True,
             }
-            return manifest_fp
-        # ORDER MATTERS (lazy-read-after-write): the updated map reads the
-        # stored map + state tables, so it is staged and swapped BEFORE any
-        # state append mutates its inputs; everything downstream reads the
-        # swapped table, not the lineage.
-        stage_metrics["canonical_map"] = _write_map_staged(wh, res["map"])
+        else:
+            # ORDER MATTERS (lazy-read-after-write): the updated map reads
+            # the stored map + state tables, so it is staged and swapped
+            # BEFORE any state append mutates its inputs; everything
+            # downstream reads the swapped table, not the lineage.
+            stage_metrics["canonical_map"] = _write_map_staged(wh, res["map"])
         cmap = wh.read("canonical_map")
-        if res["changed"] or not wh._has_data_files("canonical_triples"):
+        if res["changed"]:
             truncate(wh, "canonical_triples")
             ct = canon.canonical_triples(wh.read("triples"), cmap)
-            stage_metrics["canonical_triples"] = wh.append(
-                "canonical_triples", ct, run_id
-            )
-        elif n_todo > 0:
+        else:
+            # append just this batch's canonical triples
             batch_t = (
                 wh.read("triples").filter(F.col("run_id") == run_id).drop("run_id")
             )
-            stage_metrics["canonical_triples"] = wh.append(
-                "canonical_triples", canon.canonical_triples(batch_t, cmap), run_id
-            )
-        if res["n_new"] > 0:
-            # bands BEFORE names: the bands delta derives from new_names,
-            # whose lineage anti-joins canon_names — appending names first
-            # would make that read see its own output and go empty.
-            stage_metrics["canon_bands"] = wh.append(
-                "canon_bands", res["bands_new"], run_id
-            )
-            stage_metrics["canon_names"] = wh.append(
-                "canon_names", res["new_names"], run_id
-            )
+            ct = canon.canonical_triples(batch_t, cmap)
+        stage_metrics["canonical_triples"] = wh.append("canonical_triples", ct, run_id)
         stage_metrics["canonical_map"]["n_new_names"] = res["n_new"]
         stage_metrics["canonical_map"]["incremental"] = True
+        if res["n_new"] == 0:
+            return manifest_fp
+        # bands BEFORE names: the bands delta derives from new_names, whose
+        # lineage anti-joins canon_names — appending names first would make
+        # that read see its own output and go empty.
+        stage_metrics["canon_bands"] = wh.append("canon_bands", res["bands_new"], run_id)
+        stage_metrics["canon_names"] = wh.append("canon_names", res["new_names"], run_id)
         return map_fingerprint(cmap)
 
     # Full (re)build: first batch, or committed state unusable after a crash.
     # The distinct-name working set feeds THREE consumers (pair generation
     # inside canonical_map, the canon_names state write, the canon_bands
-    # state write) — persist it so the O(corpus) entities scan runs once.
-    from pyspark.storagelevel import StorageLevel
-
-    names_all = canon.distinct_names(wh.read("entities")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    persisted.append(names_all)
-    cmap_full = canon.canonical_map(spark, names=names_all)
+    # state write) — hold it so the O(corpus) entities scan runs once.
+    names_all = ls.hold(canon.distinct_names(wh.read("entities")))
+    cmap_full = ls.adopt(canon.canonical_map(spark, names=names_all))
     stage_metrics["canonical_map"] = _write_map_staged(wh, cmap_full)
     cmap = wh.read("canonical_map")
     truncate(wh, "canonical_triples")

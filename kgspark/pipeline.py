@@ -333,8 +333,9 @@ def build(
     UDF plans of two ``build`` calls do not hash equal even over the same
     pages, so each call takes a slot of its own, and a frame is unpersisted
     only when later persists push it out of the LRU.  Callers wanting
-    cross-call reuse memoize the returned dict, as ``__spark_entry__``'s
-    ``_web_built`` does; that memo is the only cross-call dedupe.
+    cross-call reuse memoize the returned dict with :func:`cache.memo`, as
+    ``__spark_entry__``'s ``_web_built`` does; that memo is the only
+    cross-call dedupe.
     """
     d = docs(web_pages, check_digest=check_digest)
     c = chunks(d)

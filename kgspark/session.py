@@ -5,8 +5,9 @@ Single place where every entry point (tests, bench, __spark_entry__) gets its
 session, so the AQE / Arrow / shuffle settings that matter at 100 TB are
 applied uniformly.  On a real cluster the same builder is used via
 ``spark-submit --py-files``; only ``master`` changes.  :class:`LineageScope`
-is the single place that knows when a checkpoint or a persisted input may be
-released.
+is the single place that knows when a checkpoint or a persisted input of one
+call may be released; :mod:`kgspark.cache` owns the frames that outlive a
+call.
 """
 
 from __future__ import annotations
@@ -91,8 +92,8 @@ def truncate_lineage(df):
     cluster), iterative state is checkpointed there instead and survives
     executor loss.  Default behavior is unchanged when no dir is set.
 
-    Iterative operators do not call this directly: they cut through a
-    :class:`LineageScope`, which also releases the cuts when they return.
+    Its only caller is :meth:`LineageScope.cut`: every cut in the package
+    goes through a scope, which also releases it when the call returns.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint()
@@ -100,7 +101,9 @@ def truncate_lineage(df):
 
 
 class LineageScope:
-    """Lineage and cache bookkeeping of one iterative operator.
+    """Lineage and cache bookkeeping of one call: an iterative operator, a
+    helper whose temporaries die when it returns, or one
+    ``materialize.run_pipeline`` batch.
 
     ``cut`` truncates lineage (:func:`truncate_lineage`), ``hold`` persists
     an input the loop re-reads, ``adopt`` takes over the result of another

@@ -24,6 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import cache
 from .textops import _hash60
 
 BLOOM_HASHES = 3       # k hash functions
@@ -97,7 +98,9 @@ def bloom_prefilter(
     and the FP rate are both directly observable.  The exact check is a
     left-semi join — the thing the filter would gate at scale, kept here
     as the audit column."""
-    keys = members.select(F.col(member_col).alias("k")).distinct().persist()
+    keys = cache.keyed_persist(
+        members.select(F.col(member_col).alias("k")).distinct(), "bloom_keys"
+    )
     m_bits = bloom_m_bits(keys.count())
     bloom = bloom_build(keys, "k", m_bits)
     cand = candidates.select(F.col(cand_col).alias("cand_key")).distinct()

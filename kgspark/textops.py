@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import cache, ids, spec
+from .session import LineageScope
 
 # English function words used by the n-gram/stopword language heuristic.
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -1419,6 +1420,7 @@ def lsh_candidate_pairs(
     k: int = MINHASH_K,
     band_rows: int = LSH_BAND_ROWS,
     signatures: DataFrame | None = None,
+    ls: LineageScope | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding of minhash signatures.
 
@@ -1429,7 +1431,8 @@ def lsh_candidate_pairs(
 
     Pass ``signatures`` (any frame carrying kg_doc_id + mh0..mh{k-1}, e.g. a
     persisted :func:`minhash_shingles`) to band precomputed signatures
-    instead of re-scanning the corpus.
+    instead of re-scanning the corpus.  ``ls`` is the owner of the persisted
+    bands (:func:`_keep`).
     """
     sig = signatures if signatures is not None else minhash_signatures(docs, text_col, k)
     exploded = band_hashes(sig, k, band_rows)
@@ -1449,7 +1452,7 @@ def lsh_candidate_pairs(
     # self-join branches (both verified on executed plans).
     if _est_size_bytes(exploded) > _broadcast_threshold_bytes(exploded.sparkSession):
         exploded = exploded.repartition("band", "band_hash")
-    exploded = cache.keyed_persist(exploded, "lsh_bands")
+    exploded = _keep(exploded, "lsh_bands", ls)
     left = exploded.alias("l")
     right = exploded.alias("r")
     pairs = (
@@ -1492,8 +1495,16 @@ def shingle_sets(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _keep(df: DataFrame, name: str, ls: LineageScope | None) -> DataFrame:
+    """Persist a shared upstream: held in ``ls`` when the caller's scope
+    outlives every read of it, else registered in the cross-call cache
+    (the returned lazy plan reads it after the call)."""
+    return cache.keyed_persist(df, name) if ls is None else ls.hold(df)
+
+
 def ngram_jaccard_pairs(
-    docs: DataFrame, text_col: str = "text", threshold: float = 0.8
+    docs: DataFrame, text_col: str = "text", threshold: float = 0.8,
+    ls: LineageScope | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over LSH candidate pairs (verify step of MinHash).
 
@@ -1502,10 +1513,11 @@ def ngram_jaccard_pairs(
     scan/kernel pass).  The banding self-join reads its mh columns, the
     Jaccard joins read its shingles — the text column is scanned and
     shingled exactly once per action (previously 3x: signatures for banding
-    plus two independent shingle scans).
+    plus two independent shingle scans).  ``ls`` is the owner of the
+    persisted frames (:func:`_keep`).
     """
-    both = cache.keyed_persist(minhash_shingles(docs, text_col), "minhash_shingles")
-    pairs = lsh_candidate_pairs(docs, text_col, signatures=both)
+    both = _keep(minhash_shingles(docs, text_col), "minhash_shingles", ls)
+    pairs = lsh_candidate_pairs(docs, text_col, signatures=both, ls=ls)
     sh = both.select("kg_doc_id", "shingles")
     j = (
         pairs.join(sh.withColumnRenamed("kg_doc_id", "doc_a").withColumnRenamed("shingles", "sh_a"), "doc_a")
@@ -1626,28 +1638,33 @@ def dedup_clusters(
     distinct-content doc set so untouched documents form singleton clusters.
     Downstream keeps ``is_representative`` rows: a deterministic,
     engine-reproducible dedup decision.
+
+    Runs in one :class:`~kgspark.session.LineageScope`: the returned keep-list
+    is a cut, and the shingle, band and component frames it was built from
+    are released when the call returns.
     """
     from . import canon
 
-    pairs = ngram_jaccard_pairs(docs, text_col, threshold=threshold).select(
-        F.col("doc_a").alias("name_a"), F.col("doc_b").alias("name_b")
-    )
-    comp = canon.connected_components(pairs)
-    alld = (
-        docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(ids.doc_id(F.trim(F.col(text_col))).alias("kg_doc_id"))
-        .distinct()
-    )
-    return (
-        alld.join(comp, alld["kg_doc_id"] == comp["node"], "left")
-        .select(
-            "kg_doc_id",
-            F.coalesce("comp", F.col("kg_doc_id")).alias("cluster_id"),
+    with LineageScope() as ls:
+        pairs = ngram_jaccard_pairs(docs, text_col, threshold, ls).select(
+            F.col("doc_a").alias("name_a"), F.col("doc_b").alias("name_b")
         )
-        .withColumn(
-            "is_representative", F.col("kg_doc_id") == F.col("cluster_id")
+        comp = ls.adopt(canon.connected_components(pairs))
+        alld = (
+            docs.filter(F.length(F.trim(F.col(text_col))) > 0)
+            .select(ids.doc_id(F.trim(F.col(text_col))).alias("kg_doc_id"))
+            .distinct()
         )
-    )
+        return ls.result(
+            alld.join(comp, alld["kg_doc_id"] == comp["node"], "left")
+            .select(
+                "kg_doc_id",
+                F.coalesce("comp", F.col("kg_doc_id")).alias("cluster_id"),
+            )
+            .withColumn(
+                "is_representative", F.col("kg_doc_id") == F.col("cluster_id")
+            )
+        )
 
 
 def simhash_row_py(text: str, bits: int = 32) -> int | None:
@@ -1812,11 +1829,11 @@ def distinct_kmv(
     from pyspark.sql.window import Window
 
     h = F.conv(F.substring(F.sha2(F.col(col), 256), 1, 12), 16, 10).cast("long")
-    dd = (
+    dd = cache.keyed_persist(
         docs.filter(F.col(col).isNotNull())
         .select(F.col(group_col).alias("grp"), F.greatest(h, F.lit(1)).alias("hv"))
-        .distinct()
-        .persist()
+        .distinct(),
+        "kmv_hashes",
     )
     counts = dd.groupBy("grp").agg(F.count(F.lit(1)).alias("n_distinct"))
     w_local = Window.partitionBy("grp", "pid").orderBy("hv")
@@ -1870,12 +1887,12 @@ def cms_heavy_hitters(
     probe joins the ≤ d·w-row sketch broadcast.  Total driver-bound state
     is O(d·w + k) at any corpus size.
     """
-    counts = (
+    counts = cache.keyed_persist(
         docs.filter(F.length(F.trim(F.col(text_col))) > 0)
         .select(F.explode(_toks(text_col)).alias("term"))
         .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("exact_count"))
-        .persist()
+        .agg(F.count(F.lit(1)).alias("exact_count")),
+        "cms_counts",
     )
     js = F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("j")
     cell = F.pmod(

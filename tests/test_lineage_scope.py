@@ -1,13 +1,19 @@
-"""Release gate for the iterative operators: each runs in one
+"""Release gate for persisted frames.  Each iterative operator runs in one
 ``session.LineageScope``, so after a call only the frame it returned stays
 persisted, and that frame still reads back (its blocks were not released
-with the per-round cuts)."""
+with the per-round cuts).  A ``materialize.run_pipeline`` batch leaves
+nothing persisted, and outside ``session.py`` and ``cache.py`` no module
+persists, cuts or releases a frame itself."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import re
+
 import pytest
 
-from kgspark import canon, graph, ontology, pipeline
+from kgspark import canon, datagen, graph, materialize, ontology, pipeline
 
 # two blocks joined by one bridge plus a chain: every operator iterates
 # more than once and returns a non-empty frame
@@ -102,3 +108,55 @@ def test_operator_that_raises_releases_everything(spark):
     with pytest.raises(ValueError, match="did not converge"):
         graph.kcore(path, iters=1, assert_converged=True)
     assert _persistent(spark) - before == set()
+
+
+# calls that persist, cut or release a frame; only the two owners make them
+_RELEASE_ATTRS = {"persist", "unpersist", "cache", "checkpoint", "localCheckpoint"}
+_OWNERS = {"session.py", "cache.py"}
+
+
+def test_only_the_scope_and_the_cache_persist_or_release():
+    found = []
+    for path in sorted(pathlib.Path(canon.__file__).parent.glob("*.py")):
+        if path.name in _OWNERS:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name == "truncate_lineage" or (
+                isinstance(f, ast.Attribute) and name in _RELEASE_ATTRS
+            ):
+                found.append(f"{path.name}:{node.lineno} {name}")
+    assert found == []
+
+
+def test_run_pipeline_batches_leave_nothing_persisted(spark, tmp_path):
+    """A cold batch, an incremental near-dup batch with new names, and a
+    batch that fails at the digest gate each leave no new persistent RDD."""
+    rows = datagen.web_pages_rows(60, 42)
+    wh = materialize.Warehouse(spark, str(tmp_path / "wh"))
+
+    def batch(pages, run_id, **kw):
+        before = _persistent(spark)
+        try:
+            return materialize.run_pipeline(
+                spark, spark.createDataFrame(pages, datagen.SCHEMA), wh, run_id, **kw
+            )
+        finally:
+            leaked = _persistent(spark) - before
+            assert leaked == set(), f"{run_id} left {len(leaked)} persisted"
+
+    cold = batch(rows[:6], "r1")
+    assert cold["stages"]["canonical_map"]["incremental"] is False
+    inc = batch(rows[:40], "r2", neardup=True)
+    assert inc["processed_docs"] > 0
+    assert inc["stages"]["canonical_map"]["incremental"] is True
+    assert inc["stages"]["canonical_map"]["n_new_names"] > 0
+
+    url, ts, html, text, lang = rows[40]
+    tampered = [(url, ts, html, text + " tampered", lang)] + rows[41:]
+    gate = f"digest violation for url={re.escape(url)}$"
+    with pytest.raises(AssertionError, match=gate):
+        batch(tampered, "r3", check_digest=True)
