@@ -22,14 +22,19 @@ Resume model (the reference's two recovery surfaces re-expressed):
     between stage appends and the manifest commit heals to exactly-once
     (re-derived rows are byte-identical by content-addressed ids).
 
-Lineage/metrics: every committed stage records per-partition row counts
-(spark_partition_id groupBy) plus totals in the manifest — the per-partition
-lineage + metrics rows the north rule asks for.
+Lineage/metrics: every committed stage records per-partition row counts,
+byte sizes and totals in the manifest — the per-partition lineage + metrics
+rows the north rule asks for.  They are taken from the write itself, the way
+Delta Lake records per-file statistics at commit time: the row total is an
+``Observation`` filled inside the write job, and the per-partition counts
+and sizes come from the footers of the parquet files that write created.
+No table is read back to count what was just written.
 """
 
 from __future__ import annotations
 
 import fcntl
+import glob
 import json
 import os
 import threading
@@ -109,14 +114,14 @@ class Warehouse:
         # never race run_pipeline's manifest read-modify-write and drop a
         # committed run entry (ADVICE r3).  The stash lands inside the next
         # legitimate _commit_manifest (serialized by the writer lease).
+        # Schema-registry entries of appends ride the same stash; each lands
+        # only in a commit whose ``runs`` names its run (see
+        # :meth:`_commit_manifest`).
+        self._pending: dict = {"schemas": {}}
         probe = iceberg_runtime_probe()
         prev = self.manifest().get("iceberg_probe", {})
-        self._pending_probe = (
-            probe
-            if (prev.get("backend"), prev.get("jar"))
-            != (probe["backend"], probe["jar"])
-            else None
-        )
+        if (prev.get("backend"), prev.get("jar")) != (probe["backend"], probe["jar"]):
+            self._pending["iceberg_probe"] = probe
 
     # -- paths ------------------------------------------------------------
     def table_path(self, name: str) -> str:
@@ -139,9 +144,17 @@ class Warehouse:
         # Callers that READ the manifest before building ``m`` must hold
         # the writer lease across read+commit (use :meth:`mutate_manifest`)
         # or another writer's entry committed in between is dropped.
-        if getattr(self, "_pending_probe", None) is not None:
-            m["iceberg_probe"] = self._pending_probe
-            self._pending_probe = None
+        if "iceberg_probe" in self._pending:
+            m["iceberg_probe"] = self._pending.pop("iceberg_probe")
+        # a schema entry lands with its run (or, a legacy seed with no run,
+        # at once); entries of runs this commit does not name stay pending,
+        # and the next batch's sweep drops them with their partitions
+        runs = {r.get("run_id") for r in m.get("runs", [])}
+        for name, log in self._pending["schemas"].items():
+            land = [v for v in log if v["run_id"] is None or v["run_id"] in runs]
+            if land:
+                m.setdefault("schemas", {}).setdefault(name, []).extend(land)
+                log[:] = [v for v in log if v not in land]
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(m, f, indent=1, sort_keys=True)
@@ -243,24 +256,21 @@ class Warehouse:
 
         Local-FS walk — fine for this parquet-fallback backend (the Iceberg
         backend would consult the snapshot manifest instead)."""
-        for _root, _dirs, files in os.walk(self.table_path(name)):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return next(_parquet_files(self.table_path(name)), None) is not None
 
     # -- schema evolution ---------------------------------------------------
     def _schema_log(self, name: str) -> list[dict]:
-        """The table's schema version log from the manifest: one entry per
-        column-set change, ``{"run_id": ..., "columns": {name: dtype}}`` —
-        the parquet-fallback analog of Iceberg's schema-id history."""
-        return self.manifest().get("schemas", {}).get(name, [])
-
-    def _evolved(self, name: str) -> bool:
-        log = self._schema_log(name)
-        return len({tuple(sorted(v["columns"].items())) for v in log}) > 1
+        """The table's schema version log: one entry per column-set change,
+        ``{"run_id": ..., "columns": {name: dtype}}`` — the parquet-fallback
+        analog of Iceberg's schema-id history.  Committed entries from the
+        manifest, then this writer's pending ones, so a read later in the
+        same batch already sees an evolved table."""
+        committed = self.manifest().get("schemas", {}).get(name, [])
+        return committed + self._pending["schemas"].get(name, [])
 
     def read(self, name: str) -> DataFrame:
-        if self._evolved(name):
+        log = self._schema_log(name)
+        if len({tuple(sorted(v["columns"].items())) for v in log}) > 1:
             # heterogeneous file schemas: merge footers, null-fill missing
             # columns (the Iceberg add-column read semantics); canonical
             # column order = registry insertion order.  The footer-merge
@@ -268,9 +278,7 @@ class Warehouse:
             df = self.spark.read.option("mergeSchema", "true").parquet(
                 self.table_path(name)
             )
-            known = set()
-            for v in self._schema_log(name):
-                known.update(v["columns"])
+            known = {c for v in log for c in v["columns"]}
             # canonical order: registered columns sorted by name (the
             # manifest JSON is sort_keys, so name order is the only order
             # that survives a round-trip), then unregistered extras
@@ -331,11 +339,12 @@ class Warehouse:
 
     def write(self, name: str, df: DataFrame, mode: str = "overwrite") -> dict:
         """Write a stage table and return its lineage metrics (uncommitted)."""
-        df.write.mode(mode).parquet(self.table_path(name))
+        m = self._write(name, df, self.table_path(name), mode)
+        # an overwrite resets schema history along with the data
+        self._pending["schemas"].pop(name, None)
         if self._schema_log(name):
-            # an overwrite resets schema history along with the data
-            self.mutate_manifest(lambda m: m.get("schemas", {}).pop(name, None))
-        return self._metrics(name, self.read(name))
+            self.mutate_manifest(lambda mm: mm.get("schemas", {}).pop(name, None))
+        return m
 
     def append(self, name: str, df: DataFrame, run_id: str) -> dict:
         """Append one run's rows as a ``run_id=`` partition (incremental).
@@ -343,16 +352,16 @@ class Warehouse:
         The Iceberg-append analog: per-batch write cost is proportional to
         the NEW rows, never to table size (the previous read+union+rewrite
         was O(corpus) I/O per increment — the 100 TB scale-killer).  Lineage
-        metrics are computed by reading back ONLY this run's partition
-        (partition pruning: just the new files are scanned).
+        metrics come from the write itself (:meth:`_write`): only this run's
+        partition directory is listed, and nothing is read back.
 
         SCHEMA EVOLUTION (the Iceberg add-column analog): a batch may add
         new columns (older rows read as NULL) or omit existing ones (this
         batch's rows read as NULL); a TYPE change on an existing column is
         rejected BEFORE any file is written.  Column history is versioned
-        in the manifest (``schemas``), reads of evolved tables merge
-        parquet footers, and ``read_as_of`` applies the schema as of the
-        snapshot.
+        in the manifest (``schemas``): a new entry is stashed and commits
+        with its run, reads of evolved tables merge parquet footers, and
+        ``read_as_of`` applies the schema as of the snapshot.
         """
         incoming = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         log = self._schema_log(name)
@@ -360,7 +369,7 @@ class Warehouse:
         if not log and self._has_data_files(name):
             # legacy table predating the registry: seed version 0 from the
             # files so its columns participate in conflict checks
-            seed = [{
+            log = seed = [{
                 "run_id": None,
                 "columns": {
                     f.name: f.dataType.simpleString()
@@ -369,7 +378,7 @@ class Warehouse:
                 },
             }]
         known: dict[str, str] = {}
-        for v in (seed or log):
+        for v in log:
             known.update(v["columns"])
         conflicts = {
             c: (known[c], t)
@@ -382,61 +391,65 @@ class Warehouse:
                 f"{conflicts} — add/omit columns is allowed, a type change "
                 "is not (rewrite via write() instead)"
             )
-        if (seed or log) and (seed or log)[-1]["columns"] != incoming or (
-            not seed and not log
-        ):
-            def _mut(m: dict) -> None:
-                slog = m.setdefault("schemas", {}).setdefault(name, [])
-                if not slog and seed:
-                    slog.extend(seed)
-                if not slog or slog[-1]["columns"] != incoming:
-                    slog.append({"run_id": run_id, "columns": incoming})
-
-            self.mutate_manifest(_mut)
-        out = df.withColumn("run_id", F.lit(run_id))
-        out.write.mode("append").partitionBy("run_id").parquet(
-            self.table_path(name)
+        # the run's rows go straight into its hive partition directory: a
+        # write there without partition columns always leaves at least one
+        # file, an empty one carrying the SCHEMA for a zero-row batch, so the
+        # table stays readable.  The root _SUCCESS is the marker a
+        # partitioned write would leave (see exists()).
+        m = self._write(
+            name, df.drop("run_id"),
+            os.path.join(self.table_path(name), f"run_id={run_id}"), "append",
         )
-        if self._has_data_files(name):
-            # any read/metrics failure here is REAL (corrupt files, schema
-            # drift) and must propagate — a blanket handler used to misreport
-            # it as a 0-row append and commit n_rows=0 lineage.
-            batch = self.read(name).filter(F.col("run_id") == run_id)
-            m = self._metrics(name, batch)
-        else:
-            # zero-row append into a not-yet-existing table writes only a
-            # _SUCCESS marker — materialize the SCHEMA as an empty file
-            # inside this run's partition dir so the table is readable (and
-            # wh.exists() stops lying about an unreadable table).
-            df.limit(0).coalesce(1).write.mode("append").parquet(
-                os.path.join(self.table_path(name), f"run_id={run_id}")
+        open(os.path.join(self.table_path(name), "_SUCCESS"), "a").close()
+        if not log or log[-1]["columns"] != incoming:
+            self._pending["schemas"].setdefault(name, []).extend(
+                seed + [{"run_id": run_id, "columns": incoming}]
             )
-            m = {
-                "table": name,
-                "path": self.table_path(name),
-                "n_rows": 0,
-                "n_partitions": 0,
-                "partitions": {},
-            }
-        m["mode"] = "append"
-        m["run_id"] = run_id
+        m.update(mode="append", run_id=run_id)
         return m
 
-    def _metrics(self, name: str, df: DataFrame) -> dict:
-        per_part = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .collect()
-        )
+    def _write(self, name: str, df: DataFrame, path: str, mode: str) -> dict:
+        """The one warehouse write: ``df`` as parquet under ``path``,
+        returning table ``name``'s lineage metrics taken from the write
+        itself, with no read-back job.  A frame carrying ``run_id`` is
+        written partitioned by it, so a rewritten table keeps the
+        warehouse's hive layout (mixed layouts break reads).
+
+        ``n_rows`` is an ``Observation`` filled inside the write job.
+        ``partitions`` maps each writing task's partition number (the
+        ``part-NNNNN`` of its files, summed over a task's files) to the rows
+        it wrote, and ``n_bytes`` sums the file sizes; both come from the
+        parquet footers of the files this write created under ``path``."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import Observation
+
+        before = set(_parquet_files(path))
+        obs = Observation()
+        writer = df.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode(mode)
+        if "run_id" in df.columns:
+            writer = writer.partitionBy("run_id")
+        writer.parquet(path)
+        parts: dict[str, int] = {}
+        n_bytes = 0
+        for f in set(_parquet_files(path)) - before:
+            n_bytes += os.path.getsize(f)
+            n = pq.read_metadata(f).num_rows
+            if n:
+                task = str(int(os.path.basename(f).split("-")[1]))
+                parts[task] = parts.get(task, 0) + n
         return {
             "table": name,
             "path": self.table_path(name),
-            "n_rows": int(sum(r["n_rows"] for r in per_part)),
-            "n_partitions": len(per_part),
-            "partitions": {
-                str(r["partition_id"]): int(r["n_rows"]) for r in per_part
-            },
+            "n_rows": int(obs.get["n_rows"]),
+            "n_partitions": len(parts),
+            "partitions": parts,
+            "n_bytes": n_bytes,
         }
+
+
+def _parquet_files(path: str):
+    """The parquet data files under ``path``, lazily (none if it is absent)."""
+    return glob.iglob(os.path.join(glob.escape(path), "**", "*.parquet"), recursive=True)
 
 
 def diff_as_of(
@@ -499,16 +512,13 @@ def compact(wh: "Warehouse", name: str, target_partitions: int | None = None) ->
         m = wh.manifest()
         base_rid = f"compact-{sum(1 for r in m['runs'] if str(r.get('run_id', '')).startswith('compact-'))}-{name}"
         staged = df.repartition(n).withColumn("run_id", F.lit(base_rid))
-        staged.write.mode("overwrite").partitionBy("run_id").parquet(
-            wh.table_path(name + ".tmpnew")
-        )
+        out = wh._write(name, staged, wh.table_path(name + ".tmpnew"), "overwrite")
         wh.mutate_manifest(
             lambda mm: mm["runs"].append(
                 {"run_id": base_rid, "compaction": name}
             )
         )
         _swap(wh, name)
-        out = wh._metrics(name, wh.read(name))
         out["compacted_to"] = base_rid
         return out
 
@@ -536,26 +546,21 @@ def delete_ids(wh: "Warehouse", name: str, id_col: str, ids_df: DataFrame) -> in
         # ADVICE r3: a delete that matches NOTHING must be a true no-op — no
         # history-reset entry (which would invalidate every earlier
         # read_as_of snapshot) and no seen_inputs truncate (which would
-        # force a full O(input) re-extraction pass on the next batch).
-        if before.join(doomed, id_col, "left_semi").limit(1).count() == 0:
+        # force a full O(input) re-extraction pass on the next batch).  The
+        # matched rows are exactly the rows the anti-join rewrite drops.
+        n_removed = before.join(doomed, id_col, "left_semi").count()
+        if n_removed == 0:
             return 0
         if name == "doc_status" and wh.exists("seen_inputs"):
             truncate(wh, "seen_inputs")
-        n_before = before.count()
         kept = before.join(doomed, id_col, "left_anti")
-        writer = kept.write.mode("overwrite")
-        if "run_id" in kept.columns:
-            # preserve the run_id partition layout so later incremental
-            # appends keep landing as hive partitions (mixed layouts break
-            # reads)
-            writer = writer.partitionBy("run_id")
-        writer.parquet(wh.table_path(name + ".tmpnew"))
+        wh._write(name, kept, wh.table_path(name + ".tmpnew"), "overwrite")
         # record BEFORE the swap: a crash between the two at worst leaves a
         # spurious reset entry (snapshots refuse conservatively), never a
         # rewritten table with addressable-but-wrong history
         _record_history_reset(wh, name)
         _swap(wh, name)
-        return n_before - wh.read(name).count()
+        return n_removed
 
 
 def _record_history_reset(wh: "Warehouse", name: str) -> None:
@@ -611,8 +616,9 @@ def neardup_filter_batch(
     Per batch:
       1. one text scan builds shingles + minhash signatures
          (textops.minhash_shingles);
-      2. WITHIN-batch near-dups collapse first (textops.dedup_clusters:
-         LSH candidates → exact-Jaccard verify → components; representative
+      2. WITHIN-batch near-dups collapse first (textops.dedup_clusters over
+         the same signatures, so the kernel runs once per doc: LSH
+         candidates → exact-Jaccard verify → components; representative
          = component-min kg_doc_id);
       3. surviving representatives' band hashes equi-join the warehouse
          ``neardup_bands`` table on (band, band_hash) — a bucket join whose
@@ -638,7 +644,9 @@ def neardup_filter_batch(
         sig = ls.hold(
             textops.minhash_shingles(docs, text_col).dropDuplicates(["kg_doc_id"])
         )
-        clusters = ls.adopt(textops.dedup_clusters(docs, text_col, threshold))
+        clusters = ls.adopt(
+            textops.dedup_clusters(docs, text_col, threshold, signatures=sig)
+        )
         reps = clusters.filter(F.col("is_representative")).select("kg_doc_id")
         rep_sig = ls.hold(sig.join(reps, "kg_doc_id"))
         rep_bands = textops.band_hashes(rep_sig)
@@ -862,11 +870,13 @@ def _cleanup_uncommitted(wh: Warehouse) -> None:
     commit's data files are never referenced by a snapshot).  Runs under
     the caller's writer lease (run_pipeline holds it for the batch), so a
     concurrent writer's in-flight partitions can never be mistaken for a
-    crashed run's orphans.
+    crashed run's orphans.  Schema entries still pending on ``wh`` belong
+    to such runs (a committed run's entries landed with it) and go too.
     """
     import shutil
     from urllib.parse import unquote
 
+    wh._pending["schemas"].clear()
     committed = {r["run_id"] for r in wh.manifest()["runs"]}
     for name in os.listdir(wh.root):
         tdir = wh.table_path(name)
@@ -1267,6 +1277,8 @@ def _write_map_staged(wh: Warehouse, cmap: DataFrame) -> dict:
     ``mode('overwrite')`` on the same path would delete its own input before
     evaluating it.  Staging to ``.tmpnew`` evaluates against the old table,
     then the swap is pure file ops."""
-    cmap.write.mode("overwrite").parquet(wh.table_path("canonical_map.tmpnew"))
+    m = wh._write(
+        "canonical_map", cmap, wh.table_path("canonical_map.tmpnew"), "overwrite"
+    )
     _swap(wh, "canonical_map")
-    return wh._metrics("canonical_map", wh.read("canonical_map"))
+    return m

@@ -1504,7 +1504,7 @@ def _keep(df: DataFrame, name: str, ls: LineageScope | None) -> DataFrame:
 
 def ngram_jaccard_pairs(
     docs: DataFrame, text_col: str = "text", threshold: float = 0.8,
-    ls: LineageScope | None = None,
+    ls: LineageScope | None = None, signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over LSH candidate pairs (verify step of MinHash).
 
@@ -1514,9 +1514,13 @@ def ngram_jaccard_pairs(
     Jaccard joins read its shingles — the text column is scanned and
     shingled exactly once per action (previously 3x: signatures for banding
     plus two independent shingle scans).  ``ls`` is the owner of the
-    persisted frames (:func:`_keep`).
+    persisted frames (:func:`_keep`).  A caller already holding
+    :func:`minhash_shingles` of ``docs`` passes it as ``signatures`` and the
+    kernel does not run again.
     """
-    both = _keep(minhash_shingles(docs, text_col), "minhash_shingles", ls)
+    both = signatures
+    if both is None:
+        both = _keep(minhash_shingles(docs, text_col), "minhash_shingles", ls)
     pairs = lsh_candidate_pairs(docs, text_col, signatures=both, ls=ls)
     sh = both.select("kg_doc_id", "shingles")
     j = (
@@ -1623,7 +1627,8 @@ def containment_pairs(
 
 
 def dedup_clusters(
-    docs: DataFrame, text_col: str = "text", threshold: float = 0.5
+    docs: DataFrame, text_col: str = "text", threshold: float = 0.5,
+    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate KEEP-LIST — the end product of the dedup pipeline:
     connected components over Jaccard-verified LSH candidate pairs, one row
@@ -1641,12 +1646,15 @@ def dedup_clusters(
 
     Runs in one :class:`~kgspark.session.LineageScope`: the returned keep-list
     is a cut, and the shingle, band and component frames it was built from
-    are released when the call returns.
+    are released when the call returns.  ``signatures`` is a caller-held
+    :func:`minhash_shingles` of ``docs`` (see :func:`ngram_jaccard_pairs`).
     """
     from . import canon
 
     with LineageScope() as ls:
-        pairs = ngram_jaccard_pairs(docs, text_col, threshold, ls).select(
+        pairs = ngram_jaccard_pairs(
+            docs, text_col, threshold, ls, signatures=signatures
+        ).select(
             F.col("doc_a").alias("name_a"), F.col("doc_b").alias("name_b")
         )
         comp = ls.adopt(canon.connected_components(pairs))
