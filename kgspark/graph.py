@@ -25,11 +25,13 @@ Spark restatement:
 
 Every iterative operator here (BFS, label propagation, closeness, stress,
 k-core, the rank kernel, weighted paths, HITS, components) runs inside one
-:class:`kgspark.session.LineageScope`: it cuts lineage per round (reliable
-checkpoint when a checkpoint dir is configured, localCheckpoint otherwise),
-holds the inputs its rounds re-read, and returns a cut result.  On return
-every other cut and hold is released, so a call leaves one persisted frame
-behind: the one it returned.
+:class:`kgspark.session.LoopScope`: its rounds run without AQE re-planning,
+it cuts lineage per round (reliable checkpoint when a checkpoint dir is
+configured, localCheckpoint otherwise), holds the inputs its rounds re-read,
+and returns a cut result.  A loop that stops when nothing changes reads that
+count from the round's cut (``ls.cut(df, observe=...)``), not from a job of
+its own.  On return every other cut and hold is released, so a call leaves
+one persisted frame behind: the one it returned.
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .session import LineageScope
+from .session import LineageScope, LoopScope, graph_parts
 
 DEFAULT_MAX_DEPTH = 6    # routes/graph.rs:37
 DEFAULT_MAX_PATHS = 5    # routes/graph.rs:38
@@ -137,7 +139,7 @@ def bfs_paths(
     semantics of the reference.  Level-synchronous driver loop, <= max_depth
     rounds, each one join + one anti-join + one min-aggregation.
     """
-    with LineageScope() as ls:
+    with LoopScope(edge_table.sparkSession) as ls:
         und = ls.cut(undirected(edge_table).select("src", "dst").distinct())
         types = vertex_table.select("id", "entity_type")
 
@@ -163,12 +165,13 @@ def bfs_paths(
                     F.concat("path", F.array("dst")).alias("path"),
                 )
             )
-            fresh = ls.cut(
+            fresh, n_fresh = ls.cut(
                 expanded.join(visited, ["start", "node"], "left_anti")
                 .groupBy("start", "node")
-                .agg(F.min("path").alias("path"))
+                .agg(F.min("path").alias("path")),
+                observe=F.count(F.lit(1)),
             )
-            if fresh.limit(1).count() == 0:
+            if n_fresh == 0:
                 break
             hits = (
                 fresh.join(types, fresh["node"] == types["id"])
@@ -389,20 +392,6 @@ def _adjacency(triples: DataFrame) -> DataFrame:
     )
 
 
-def _graph_parts(spark: SparkSession, n: int) -> int:
-    """Shuffle width for a loop over ``n`` graph rows.
-
-    Size the per-round exchanges to the GRAPH, not the corpus: the iterating
-    frames are O(nodes), and at small node counts the session's corpus-scale
-    width only buys task-launch + checkpoint overhead per round (measured on
-    pagerank: 34s -> ~3s at sf0.1 under local[16]/48).  ~1M rows per
-    partition, capped at the session default so a billion-node graph still
-    uses the cluster-tuned width.
-    """
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(default_parts, 1 + n // 1_000_000))
-
-
 def degrees(triples: DataFrame) -> DataFrame:
     """Per-name degree centrality over the distinct name-level edge sets:
     out_degree (distinct objects the name relates to), in_degree (distinct
@@ -515,16 +504,15 @@ def components(triples: DataFrame) -> DataFrame:
     """
     from . import canon
 
-    with LineageScope() as ls:
-        pairs = ls.hold(
+    with LoopScope(triples.sparkSession) as ls:
+        pairs = (
             triples.select(
                 F.col("subj").alias("name_a"), F.col("obj").alias("name_b")
             )
             .filter(F.col("name_a") != F.col("name_b"))
             .distinct()
         )
-        nparts = _graph_parts(triples.sparkSession, pairs.count())
-        comp = ls.adopt(canon.connected_components(pairs, num_partitions=nparts))
+        comp = ls.adopt(canon.connected_components(pairs))
         sizes = comp.groupBy("comp").agg(
             F.count(F.lit(1)).cast("long").alias("n_members")
         )
@@ -563,7 +551,7 @@ def lpa_communities(triples: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     via min(struct(-count, label)) — no windows over whole partitions;
     lineage truncated per round so the plan stays O(1) deep.
     """
-    with LineageScope() as ls:
+    with LoopScope(triples.sparkSession) as ls:
         adj = ls.hold(_adjacency(triples))
         lab = adj.select("name").distinct().withColumn("label", F.col("name"))
         for _ in range(iters):
@@ -613,7 +601,7 @@ def harmonic_closeness(
     run the standard K-sampled-sources estimate (deterministic: the K
     lexicographically-smallest names), which bounds state by K·m.
     """
-    with LineageScope() as ls:
+    with LoopScope(triples.sparkSession) as ls:
         adj = ls.hold(_adjacency(triples))
         nodes = adj.select("name").distinct()
         sources = (
@@ -624,13 +612,14 @@ def harmonic_closeness(
         )
         per_round = []
         for dist in range(1, max_iters + 1):
-            nxt = ls.cut(
+            nxt, n_nxt = ls.cut(
                 frontier.join(adj, frontier["node"] == adj["name"])
                 .select("src", F.col("nb").alias("node"))
                 .distinct()
-                .join(visited, ["src", "node"], "left_anti")
+                .join(visited, ["src", "node"], "left_anti"),
+                observe=F.count(F.lit(1)),
             )
-            if nxt.limit(1).count() == 0:
+            if n_nxt == 0:
                 break
             per_round.append(
                 nxt.groupBy("src").agg(
@@ -687,7 +676,7 @@ def stress_centrality(
     never the plan; sampling bounds state and rounds independently of
     corpus size.
     """
-    with LineageScope() as ls:
+    with LoopScope(triples.sparkSession) as ls:
         adj = ls.hold(_adjacency(triples))
         nodes = ls.hold(adj.select("name").distinct())
         sources = nodes.orderBy("name").limit(n_sources).select(
@@ -704,15 +693,16 @@ def stress_centrality(
         ]
         settled = ls.hold(levels[0].select("src", "node"))
         for _ in range(max_depth):
-            nxt = ls.cut(
+            nxt, n_nxt = ls.cut(
                 levels[-1]
                 .join(adj, levels[-1]["node"] == adj["name"])
                 .select("src", F.col("nb").alias("node"), "sigma")
                 .join(settled, ["src", "node"], "left_anti")
                 .groupBy("src", "node")
-                .agg(F.sum("sigma").cast("long").alias("sigma"))
+                .agg(F.sum("sigma").cast("long").alias("sigma")),
+                observe=F.count(F.lit(1)),
             )
-            if nxt.limit(1).count() == 0:
+            if n_nxt == 0:
                 break
             levels.append(nxt)
             settled = ls.cut(settled.union(nxt.select("src", "node")))
@@ -804,13 +794,11 @@ def kcore(
     appear, matching degrees()/triangle_counts() join semantics.
     """
     spark = triples.sparkSession
-    with LineageScope() as ls:
-        adj = ls.hold(_adjacency(triples))
-        n_adj = adj.count()
+    with LoopScope(spark) as ls:
+        adj, n_adj = ls.cut(_adjacency(triples), observe=F.count(F.lit(1)))
         if n_adj == 0:
             return spark.createDataFrame([], "name string, coreness long")
-        adj = ls.hold(adj.repartition(_graph_parts(spark, n_adj), "nb"))
-        adj.count()
+        adj = ls.hold(adj.repartition(graph_parts(spark, n_adj), "nb"))
 
         def h_round(state: DataFrame) -> DataFrame:
             nbvals = adj.join(
@@ -832,11 +820,9 @@ def kcore(
         result = ls.result(cur.withColumnRenamed("val", "coreness"))
         if assert_converged:
             nxt = h_round(result.withColumnRenamed("coreness", "val"))
-            moved = (
-                result.join(nxt, "name")
-                .filter(F.col("coreness") != F.col("val"))
-                .limit(1)
-                .count()
+            _, moved = ls.cut(
+                result.join(nxt, "name").filter(F.col("coreness") != F.col("val")),
+                observe=F.count(F.lit(1)),
             )
             if moved:
                 raise ValueError(
@@ -855,30 +841,29 @@ def _directed(ls: LineageScope, triples: DataFrame):
     """Shared prep of the directed operators (pagerank, PPR, HITS): the
     distinct non-self-loop (subj, obj) pairs partitioned on ``subj`` and the
     nodes as (name, out_deg) partitioned on ``name``, both held by ``ls``
-    with the same :func:`_graph_parts` width, so every per-round join reuses
-    the distribution.  Returns (pairs, nodes, n_nodes, nparts), or None for
-    an empty graph."""
+    with the same :func:`~kgspark.session.graph_parts` width, so every
+    per-round join reuses the distribution.  The node count rides the cut of
+    the nodes; the two holds fill during the first round.  Returns (pairs,
+    nodes, n_nodes, nparts), or None for an empty graph."""
     d = ls.hold(
         triples.select("subj", "obj").filter(F.col("subj") != F.col("obj")).distinct()
     )
     out_deg = d.groupBy(F.col("subj").alias("name")).agg(
         F.count(F.lit(1)).cast("long").alias("out_deg")
     )
-    nodes = ls.hold(
+    nodes, n = ls.cut(
         d.select(F.col("subj").alias("name"))
         .union(d.select(F.col("obj").alias("name")))
         .distinct()
         .join(out_deg, "name", "left")
-        .select("name", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+        .select("name", F.coalesce("out_deg", F.lit(0)).alias("out_deg")),
+        observe=F.count(F.lit(1)),
     )
-    n = nodes.count()
     if n == 0:
         return None
-    nparts = _graph_parts(triples.sparkSession, n)
+    nparts = graph_parts(triples.sparkSession, n)
     d = ls.hold(d.repartition(nparts, "subj"))
     nodes = ls.hold(nodes.repartition(nparts, "name"))
-    d.count()
-    nodes.count()
     return d, nodes, n, nparts
 
 
@@ -973,7 +958,7 @@ def personalized_pagerank(
     k seed names are collected once and flag the nodes by literal
     membership, so no round joins a seed frame.
     """
-    with LineageScope() as ls:
+    with LoopScope(triples.sparkSession) as ls:
         g = _directed(ls, triples)
         if g is None:
             return triples.sparkSession.createDataFrame([], "name string, ppr long")
@@ -1018,7 +1003,7 @@ def weighted_shortest_paths(
     """
     spark = triples.sparkSession
     nparts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")), 8))
-    with LineageScope() as ls:
+    with LoopScope(spark) as ls:
         edges = ls.hold(
             triples.filter(F.col("subj") != F.col("obj"))
             .groupBy("subj", "obj")
@@ -1101,7 +1086,7 @@ def hits(
             )
         )
 
-    with LineageScope() as ls:
+    with LoopScope(triples.sparkSession) as ls:
         g = _directed(ls, triples)
         if g is None:
             return triples.sparkSession.createDataFrame(
@@ -1167,7 +1152,7 @@ def pagerank(
     of the per-round join are co-partitioned on the name key, so each round
     is one shuffle of the rank frame.
     """
-    with LineageScope() as ls:
+    with LoopScope(triples.sparkSession) as ls:
         g = _directed(ls, triples)
         if g is None:
             return triples.sparkSession.createDataFrame(

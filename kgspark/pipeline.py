@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import cache, chunking, html_extract, ids, spec, web_extraction
-from .session import LineageScope
+from .session import LoopScope
 
 
 def _norm_name(c: Column) -> Column:
@@ -542,7 +542,7 @@ def redirect_resolve(
     truncated per round; doubling makes a 64-hop chain cost 6 shuffles,
     the property linear frontier walks lose at crawl scale.
     """
-    with LineageScope() as ls:
+    with LoopScope(redirects.sparkSession) as ls:
         ptr = ls.hold(
             redirects.select(
                 F.col("src_url").alias("src"), F.col("dst_url").alias("ptr")

@@ -1,9 +1,13 @@
-"""Release gate for persisted frames.  Each iterative operator runs in one
-``session.LineageScope``, so after a call only the frame it returned stays
-persisted, and that frame still reads back (its blocks were not released
-with the per-round cuts).  A ``materialize.run_pipeline`` batch leaves
-nothing persisted, and outside ``session.py`` and ``cache.py`` no module
-persists, cuts or releases a frame itself."""
+"""Release gate for persisted frames, and the planning policy of loops.
+Each iterative operator runs in one ``session.LineageScope``, so after a
+call only the frame it returned stays persisted, and that frame still reads
+back (its blocks were not released with the per-round cuts).  A
+``materialize.run_pipeline`` batch leaves nothing persisted, and outside
+``session.py`` and ``cache.py`` no module persists, cuts or releases a frame
+itself.  The loop operators run in a ``session.LoopScope``: without AQE,
+with the caller's setting back afterwards, and with the same rows as under
+AQE; their convergence counts ride the cut (``ls.cut(df, observe=...)``),
+which equals ``count()`` on both checkpoint paths."""
 
 from __future__ import annotations
 
@@ -13,7 +17,12 @@ import re
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from kgspark import canon, datagen, graph, materialize, ontology, pipeline
+from kgspark.session import LineageScope, LoopScope
+
+AQE = "spark.sql.adaptive.enabled"
 
 # two blocks joined by one bridge plus a chain: every operator iterates
 # more than once and returns a non-empty frame
@@ -79,6 +88,10 @@ OPERATORS = {
 }
 
 
+# the operators that iterate in a LoopScope; the rule operators do not
+LOOP_OPERATORS = sorted(set(OPERATORS) - {"rule_mining", "rule_apply"})
+
+
 def _persistent(spark) -> set[int]:
     """Ids of the persistent RDDs.  Compared as sets, not sizes: the
     ContextCleaner may free an earlier test's leftovers mid-call, which
@@ -97,17 +110,131 @@ def test_operator_leaves_only_its_result_persisted(spark, name):
     assert sorted(map(repr, out.collect())) == rows
 
 
-def test_operator_that_raises_releases_everything(spark):
-    """kcore's convergence check raises after the result is cut: the
-    result goes with the rest."""
-    path = spark.createDataFrame(
+def _path(spark):
+    return spark.createDataFrame(
         [(f"p{i}", "r", f"p{i + 1}", "d") for i in range(8)],
         ["subj", "pred", "obj", "doc_id"],
     )
+
+
+def test_operator_that_raises_releases_everything(spark):
+    """kcore's convergence check raises after the result is cut: the
+    result goes with the rest."""
+    path = _path(spark)
     before = _persistent(spark)
     with pytest.raises(ValueError, match="did not converge"):
         graph.kcore(path, iters=1, assert_converged=True)
     assert _persistent(spark) - before == set()
+
+
+def _entries(monkeypatch) -> list[str]:
+    """Record the AQE setting inside every LoopScope entered from now on."""
+    seen = []
+    enter = LoopScope.__enter__
+
+    def spy(self):
+        out = enter(self)
+        seen.append(self._spark.conf.get(AQE))
+        return out
+
+    monkeypatch.setattr(LoopScope, "__enter__", spy)
+    return seen
+
+
+@pytest.mark.parametrize("name", sorted(OPERATORS))
+def test_loop_operators_match_their_rows_under_aqe(spark, monkeypatch, name):
+    """The loop operators, and only they, run their rounds in a LoopScope
+    with AQE off; forcing AQE on in the same scopes gives the same rows."""
+    seen = _entries(monkeypatch)
+    rows = sorted(map(repr, OPERATORS[name](spark).collect()))
+    assert (bool(seen) and set(seen) == {"false"}) == (name in LOOP_OPERATORS)
+    monkeypatch.setattr(LoopScope, "LOOP_CONFS", {AQE: "true"})
+    seen.clear()
+    assert sorted(map(repr, OPERATORS[name](spark).collect())) == rows
+    assert set(seen) <= {"true"}
+
+
+@pytest.mark.parametrize("before", ["true", "false"])
+def test_loop_scope_restores_planning_policy(spark, monkeypatch, before):
+    """After a normal exit, kcore's non-convergence raise and a nested
+    scope, AQE is what it was on entry, also for a caller (such as
+    test_skew) that had it off already."""
+    conf = spark.conf
+    saved = conf.get(AQE)
+    conf.set(AQE, before)
+    try:
+        with LoopScope(spark):
+            assert conf.get(AQE) == "false"
+        assert conf.get(AQE) == before
+
+        graph.pagerank(_triples(spark)).collect()
+        assert conf.get(AQE) == before
+
+        with pytest.raises(ValueError, match="did not converge"):
+            graph.kcore(_path(spark), iters=1, assert_converged=True)
+        assert conf.get(AQE) == before
+
+        # graph.components' scope holds canon.connected_components' scope:
+        # the inner exit gives the outer scope back its "false"
+        inner_exit = []
+        cc = canon.connected_components
+
+        def spy(pairs, **kw):
+            out = cc(pairs, **kw)
+            inner_exit.append(conf.get(AQE))
+            return out
+
+        monkeypatch.setattr(canon, "connected_components", spy)
+        graph.components(_triples(spark)).collect()
+        assert inner_exit == ["false"]
+        assert conf.get(AQE) == before
+    finally:
+        conf.set(AQE, saved)
+
+
+def _jobs(spark, group: str, action) -> tuple[int, object]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.mark.parametrize("path", ["local", "reliable"])
+def test_counting_cut_equals_count(spark, tmp_path, path):
+    """``cut(df, observe=agg)`` returns ``agg`` over the cut rows from the
+    checkpoint job itself: equal to ``count()``, and no job more than the
+    plain cut, on the local and on the reliable checkpoint path."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    if path == "reliable":
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    df = (
+        spark.range(5000)
+        .filter(F.col("id") % 3 != 0)
+        .groupBy((F.col("id") % 101).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    try:
+        with LineageScope() as ls:
+            n_plain, _ = _jobs(spark, f"plain-{path}", lambda: ls.cut(df))
+            agg = F.struct(F.count(F.lit(1)).alias("n"), F.sum("n").alias("total"))
+            n_obs, (cut, value) = _jobs(
+                spark, f"observed-{path}", lambda: ls.cut(df, observe=agg)
+            )
+            assert n_obs == n_plain
+            assert (value["n"], value["total"]) == (df.count(), 3333)
+            assert cut.count() == df.count()
+            _, empty = ls.cut(df.filter("k < 0"), observe=F.count(F.lit(1)))
+            assert empty == 0
+        if path == "reliable":
+            files = [p for p in (tmp_path / "ckpt").rglob("*") if p.is_file()]
+            assert files, "expected RDD checkpoint files under the checkpoint dir"
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None
 
 
 # calls that persist, cut or release a frame; only the two owners make them
@@ -129,6 +256,38 @@ def test_only_the_scope_and_the_cache_persist_or_release():
                 isinstance(f, ast.Attribute) and name in _RELEASE_ATTRS
             ):
                 found.append(f"{path.name}:{node.lineno} {name}")
+    assert found == []
+
+
+def test_only_the_session_sets_adaptive_confs():
+    """Planning policy has one owner: no other module names an AQE conf."""
+    found = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(pathlib.Path(canon.__file__).parent.glob("*.py"))
+        if path.name != "session.py"
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("spark.sql.adaptive.")
+    ]
+    assert found == []
+
+
+def test_loops_have_no_probe_count():
+    """A convergence or emptiness check in the graph and canon loops rides
+    the round's cut; no ``.limit(1).count()`` probe job is left."""
+    pkg = pathlib.Path(canon.__file__).parent
+    found = [
+        f"{name}:{node.lineno}"
+        for name in ("graph.py", "canon.py")
+        for node in ast.walk(ast.parse((pkg / name).read_text(), name))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "count"
+        and isinstance(node.func.value, ast.Call)
+        and isinstance(node.func.value.func, ast.Attribute)
+        and node.func.value.func.attr == "limit"
+    ]
     assert found == []
 
 
